@@ -128,14 +128,20 @@ def image_phash(media: DataFrame, id_col: str = "path") -> DataFrame:
 
     def _run(batches):
         for pdf in batches:
-            out = []
-            for _, r in pdf.iterrows():
+            hashes = []
+            for content in pdf["content"]:
                 try:
-                    h = phash(bytes(r["content"]))
+                    hashes.append(phash(bytes(content)))
                 except Exception:  # noqa: BLE001 - log-and-continue
-                    h = None
-                out.append({"id": r[id_col], "phash": h})
-            yield pd.DataFrame(out, columns=["id", "phash"])
+                    hashes.append(None)
+            # nullable Int64: a NULL hash must not make pandas infer
+            # float64, which would round every 64-bit hash in the batch
+            yield pd.DataFrame(
+                {
+                    "id": pdf[id_col].to_numpy(),
+                    "phash": pd.array(hashes, dtype="Int64"),
+                }
+            )
 
     return media.select(id_col, "content").mapInPandas(
         _run, schema=f"id {id_field}, phash long"

@@ -44,9 +44,11 @@ class LoadResult:
     csv_counts: dict[str, int] = field(default_factory=dict)
     report: DataFrame | None = None
     check_passed: bool = True
-    # Views whose parquet sink write SUCCEEDED this run. Reconciliation
-    # only trusts a sink directory listed here — a directory left by a
-    # previous run must not stand in for rows this run failed to write.
+    # Views whose sink write SUCCEEDED this run (a parquet directory or
+    # a Postgres table). Reconciliation only trusts a parquet directory
+    # listed here, and a combined table is built from its member tables
+    # only when every member is listed — a table left by a previous run
+    # must not stand in for rows this run failed to write.
     sink_written: set[str] = field(default_factory=set)
 
 
@@ -316,180 +318,199 @@ class Loader:
     def write_sink(self, result: LoadResult) -> None:
         """Materialize import views to the configured sink.
 
-        Postgres sink default is the COPY wire protocol (pgfutter-class
-        throughput, no driver jar needed); ``db_protocol="jdbc"`` opts
-        into Spark's JDBC writer. Per-table failures are logged and the
-        rest of the tables continue (reference main.py:376-404 never
+        Both sinks share one scheduler and differ only in two steps:
+        how one view is written, and how a combined table is built
+        from member tables this run already wrote.
+
+        - Postgres: the default writes through the COPY wire protocol
+          (pgfutter-class throughput, no driver jar needed);
+          ``db_protocol="jdbc"`` opts into Spark's JDBC writer. On the
+          COPY path a combined table is built inside Postgres from its
+          members with ``CREATE TABLE ... AS SELECT * FROM m1 UNION ALL
+          ...`` — the reference's own combine (main.py:215-248) —
+          instead of parsing and encoding the same CSV rows twice.
+        - Parquet: a combined table is written from its members'
+          parquet files (columnar decode instead of a second CSV parse;
+          measured -38% on the sf1 ingest spine).
+
+        Writes run concurrently from driver threads, because a per-file
+        view is a single-split CSV scan and serial writes would leave
+        the cluster one task busy per job (the reference likewise ran
+        one pgfutter process per file). Per-file views are submitted
+        first. Each combined view waits only for its own members'
+        futures, so one slow file never stalls an unrelated group.
+        File tasks never wait on anything, so the pool cannot deadlock.
+
+        A combined table is built from its members only when every
+        member was written THIS run (``sink_written``: a table or
+        directory left by a previous run, or one whose write failed,
+        must not stand in for this run's rows) and the group has fewer
+        than ``_DISTRIBUTED_HEADER_MIN`` members. Below that size the
+        driver-side header check in ``read_csv_group`` has verified
+        every member header exactly; at or above it, only the
+        CSV-backed view's scan validates headers, and the member path's
+        O(members) driver work would cost more than it saves. Every
+        other case, and any failure of the member path, writes the
+        combined table from its CSV-backed view, so output content
+        never depends on which path ran. Per-table failures are logged
+        and the other tables continue (reference main.py:376-404 never
         aborts the whole run on one table)."""
         cfg = self.config
         if cfg.db is not None:
-            if cfg.db_protocol == "jdbc":
-                from .sources.jdbc import write_table as _write
-            else:
-                from .sources.copy_sink import copy_write as _write
-
-            for view, df in {**result.file_views, **result.combined_views}.items():
-                try:
-                    _write(df, cfg.db, view.removeprefix("import_"))
-                except Exception:  # noqa: BLE001
-                    log.exception("sink write failed for %s", view)
+            write_view, combine = self._postgres_steps(result)
         elif cfg.sink_dir is not None:
-            # Writes run concurrently from driver threads (Spark's
-            # scheduler interleaves the jobs): per-FILE views are
-            # single-split CSV scans, so sequential writes would leave
-            # the cluster 1-task busy per job — concurrency restores
-            # ingest parallelism across files, the same effective shape
-            # as the reference's per-file pgfutter processes.
-            from concurrent.futures import ThreadPoolExecutor
+            write_view, combine = self._parquet_steps()
+        else:
+            return
 
-            def _write_one(item):
-                view, df = item
+        from concurrent.futures import ThreadPoolExecutor
+
+        from .sources.csv import _DISTRIBUTED_HEADER_MIN
+
+        def _write_one(view: str, df: DataFrame) -> None:
+            try:
+                write_view(view, df)
+            except Exception:  # noqa: BLE001 - log-and-continue
+                log.exception("sink write failed for %s", view)
+                return
+            result.sink_written.add(view)
+
+        def _write_combined(view: str, csv_df: DataFrame) -> None:
+            table = view.removeprefix("import_")
+            members = [
+                import_view_name(file_table_name(f))
+                for f in result.table_csv_files.get(table, [])
+            ]
+            for m in members:
+                fut = file_futures.get(m)
+                if fut is not None:
+                    fut.result()
+            if (
+                combine is not None
+                and 0 < len(members) < _DISTRIBUTED_HEADER_MIN
+                # two files with one stem (in different directories)
+                # share one member table, which holds only one of them
+                and len(set(members)) == len(members)
+                and all(m in result.sink_written for m in members)
+            ):
                 try:
-                    df.write.mode("overwrite").parquet(
-                        str(cfg.sink_dir / view)
-                    )
-                    # Record success so reconciliation only counts sink
-                    # directories THIS run wrote (a stale directory from
-                    # a prior run must not mask a failed write).
+                    combine(view, members, csv_df)
                     result.sink_written.add(view)
-                    # Bucketed CTAS: additionally persist views carrying
-                    # all bucket columns as bucketed+sorted catalog
-                    # tables, so downstream joins/aggs on the key are
-                    # exchange-free — the shuffle is paid ONCE here,
-                    # not per query.
-                    if cfg.bucket_by and set(cfg.bucket_by) <= set(
-                        df.columns
-                    ):
-                        from .operators.bucketing import write_bucketed
-
-                        try:
-                            write_bucketed(
-                                df,
-                                f"{view}_bucketed",
-                                bucket_cols=list(cfg.bucket_by),
-                                num_buckets=cfg.bucket_count,
-                                path=str(cfg.sink_dir / f"{view}_bucketed"),
-                            )
-                        except Exception:  # noqa: BLE001
-                            log.exception(
-                                "bucketed sink failed for %s", view
-                            )
-                except Exception:  # noqa: BLE001 - log-and-continue
-                    log.exception("sink write failed for %s", view)
-
-            # Per-file views first (the only CSV parse of the run),
-            # combined prefix views as soon as THEIR members land — a
-            # per-view dependency, not a global barrier, so one slow
-            # file never stalls an unrelated prefix group's combine.
-            #
-            # A combined view is the UNION ALL of its member file
-            # views (strict LIKE-first schema), so when every member's
-            # parquet just landed, the combined sink is written FROM
-            # those parquet files — columnar decode instead of a
-            # second full CSV parse of the same bytes (measured -38%
-            # on the sf1 ingest spine). Any member missing (its write
-            # failed) falls back to the CSV-backed view, so output
-            # content never depends on the fast path. File tasks never
-            # wait on anything, so a combined task blocking on its
-            # members cannot deadlock the pool.
-            def _write_combined(view, csv_df):
-                table = view.removeprefix("import_")
-                members = [
-                    import_view_name(file_table_name(f))
-                    for f in result.table_csv_files.get(table, [])
-                ]
-                for m in members:
-                    fut = file_futures.get(m)
-                    if fut is not None:
-                        fut.result()
-                # The fast path may only ever trade speed: a member
-                # parquet that fails to read back (corrupt or partially-
-                # committed dir, transient FS error, analysis error)
-                # falls back to the CSV-backed df instead of propagating
-                # through fut.result() and aborting the whole write_sink
-                # — the log-and-continue contract (reference
-                # main.py:376-404). Plan-time failures are caught here;
-                # an action-time failure inside _write_one (swallowed
-                # there) leaves the view out of sink_written, and the
-                # retry below re-writes it from the CSV-backed view.
-                df = csv_df
-                # The parquet fast path applies to SMALL groups only
-                # (r12): every step of it is O(members) DRIVER-side —
-                # measured 66.6ms/member for the per-member footer
-                # open alone, and the unionByName fold builds an
-                # O(members) plan (200 members: fold 9.75s vs 3.09s
-                # for one multi-path scan) — so at combine-at-scale
-                # group sizes it recreates the serial-driver-loop
-                # disease the scan-time header check just removed.
-                # Large groups write from the CSV-backed view instead:
-                # ONE multi-path scan whose enforceSchema=false header
-                # validation runs distributed (read_csv_group's scale
-                # switch), trading the columnar-decode speedup for
-                # correctness-by-construction at exactly the sizes
-                # where a silent permuted member could otherwise slip
-                # through parquet's by-name resolution.
-                from .sources.csv import _DISTRIBUTED_HEADER_MIN
-
-                if (
-                    members
-                    and len(members) < _DISTRIBUTED_HEADER_MIN
-                    and all(m in result.sink_written for m in members)
-                ):
-                    try:
-                        parts = [
-                            self.spark.read.parquet(str(cfg.sink_dir / m))
-                            for m in members
-                        ]
-                        cols = csv_df.columns
-                        # LIKE-first strictness on the fast path (r12):
-                        # member parquet columns ARE the file's header
-                        # (per-file views read header=true), so exact
-                        # positional equality re-checks header drift at
-                        # footer cost — without it, by-name resolution
-                        # would silently "fix" a PERMUTED member.
-                        # Redundant defense for small groups (the
-                        # pre-scan driver check already verified the
-                        # CSV headers) but cheap at < 64 members.
-                        for m, p in zip(members, parts):
-                            if p.columns != cols:
-                                raise ValueError(
-                                    f"member {m} columns {p.columns} != "
-                                    f"{cols} (LIKE-first drift; "
-                                    "reference main.py:247)"
-                                )
-                        # one multi-path scan, not an O(members)
-                        # unionByName fold (columns verified equal, so
-                        # positional order is pinned by the select)
-                        df = self.spark.read.parquet(
-                            *[str(cfg.sink_dir / m) for m in members]
-                        ).select(*cols)
-                    except Exception:  # noqa: BLE001
-                        log.exception(
-                            "combined fast path failed for %s; "
-                            "falling back to CSV-backed view",
-                            view,
-                        )
-                        df = csv_df
-                _write_one((view, df))
-                if df is not csv_df and view not in result.sink_written:
-                    log.warning(
-                        "combined fast-path write failed for %s; "
-                        "retrying from CSV-backed view",
+                    return
+                except Exception:  # noqa: BLE001 - fall back below
+                    log.exception(
+                        "combine from members failed for %s; writing "
+                        "from the CSV-backed view",
                         view,
                     )
-                    _write_one((view, csv_df))
+            _write_one(view, csv_df)
 
-            with ThreadPoolExecutor(max_workers=16) as pool:
-                file_futures = {
-                    view: pool.submit(_write_one, (view, df))
-                    for view, df in result.file_views.items()
-                }
-                combined_futures = [
-                    pool.submit(_write_combined, view, df)
-                    for view, df in result.combined_views.items()
-                ]
-                for fut in [*file_futures.values(), *combined_futures]:
-                    fut.result()
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            file_futures = {
+                view: pool.submit(_write_one, view, df)
+                for view, df in result.file_views.items()
+            }
+            combined_futures = [
+                pool.submit(_write_combined, view, df)
+                for view, df in result.combined_views.items()
+            ]
+            for fut in [*file_futures.values(), *combined_futures]:
+                fut.result()
+
+    def _postgres_steps(self, result: LoadResult):
+        """(write one view, combine from members) for the Postgres sink.
+        The JDBC path has no member combine: it writes every combined
+        table from its CSV-backed view."""
+        db = self.config.db
+        if self.config.db_protocol == "jdbc":
+            from .sources import jdbc
+
+            def write_jdbc(view: str, df: DataFrame) -> None:
+                jdbc.write_table(df, db, view.removeprefix("import_"))
+
+            return write_jdbc, None
+
+        from .sources import copy_sink
+        from .sources.pgwire import connect
+
+        # Once, before the fan-out: concurrent CREATE SCHEMA IF NOT
+        # EXISTS on a fresh database can fail on pg_namespace's unique
+        # index, and every copy_write would otherwise race to create it.
+        try:
+            with connect(db) as conn:
+                copy_sink.ensure_schema(conn)
+        except Exception:  # noqa: BLE001 - each write then logs its own
+            log.exception("sink schema creation failed")
+
+        def write_copy(view: str, df: DataFrame) -> None:
+            copy_sink.copy_write(df, db, view.removeprefix("import_"))
+
+        def combine_in_db(
+            view: str, members: list[str], csv_df: DataFrame
+        ) -> None:
+            # Member tables were created from their views' schemas, so
+            # equal view columns mean the positional UNION ALL lines up
+            # with the combined view's columns (a header the driver
+            # could not read was only warned about, not verified).
+            for m in members:
+                if result.file_views[m].columns != csv_df.columns:
+                    raise ValueError(
+                        f"member {m} columns differ from {view}"
+                    )
+            copy_sink.combine_tables(
+                db,
+                view.removeprefix("import_"),
+                [m.removeprefix("import_") for m in members],
+            )
+
+        return write_copy, combine_in_db
+
+    def _parquet_steps(self):
+        """(write one view, combine from members) for the parquet sink."""
+        cfg = self.config
+
+        def write_parquet(view: str, df: DataFrame) -> None:
+            df.write.mode("overwrite").parquet(str(cfg.sink_dir / view))
+            # Bucketed CTAS: additionally persist views carrying all
+            # bucket columns as bucketed+sorted catalog tables, so
+            # downstream joins/aggs on the key are exchange-free — the
+            # shuffle is paid ONCE here, not per query.
+            if cfg.bucket_by and set(cfg.bucket_by) <= set(df.columns):
+                from .operators.bucketing import write_bucketed
+
+                try:
+                    write_bucketed(
+                        df,
+                        f"{view}_bucketed",
+                        bucket_cols=list(cfg.bucket_by),
+                        num_buckets=cfg.bucket_count,
+                        path=str(cfg.sink_dir / f"{view}_bucketed"),
+                    )
+                except Exception:  # noqa: BLE001
+                    log.exception("bucketed sink failed for %s", view)
+
+        def combine_from_parquet(
+            view: str, members: list[str], csv_df: DataFrame
+        ) -> None:
+            paths = [str(cfg.sink_dir / m) for m in members]
+            cols = csv_df.columns
+            # Member parquet columns ARE the file's header (per-file
+            # views read header=true), so exact positional equality
+            # re-checks header drift at footer cost. Without it,
+            # parquet's by-name resolution would silently "fix" a
+            # PERMUTED member.
+            for m, p in zip(members, paths):
+                got = self.spark.read.parquet(p).columns
+                if got != cols:
+                    raise ValueError(
+                        f"member {m} columns {got} != {cols} "
+                        "(LIKE-first drift; reference main.py:247)"
+                    )
+            # one multi-path scan, not an O(members) unionByName fold
+            # (columns verified equal, so the select pins their order)
+            write_parquet(view, self.spark.read.parquet(*paths).select(*cols))
+
+        return write_parquet, combine_from_parquet
 
 
 def run_pipeline(

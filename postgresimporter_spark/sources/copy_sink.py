@@ -16,6 +16,20 @@ so a failed task leaves nothing behind and Spark's task retry is safe;
 with speculative execution enabled, use ``mode="append"`` into a
 staging table instead.
 
+The pipeline (``Loader.write_sink``) writes its tables concurrently,
+one ``copy_write`` per per-file view from a driver thread pool. It
+creates the target schema once with ``ensure_schema`` before that
+fan-out; ``ensure_schema`` also tolerates concurrent callers, so
+standalone concurrent ``copy_write`` calls into a fresh database work
+too. A prefix-combined table whose members all landed in the same run
+is built inside Postgres by ``combine_tables`` (``CREATE TABLE ... AS
+SELECT * FROM m1 UNION ALL ...``, the reference's own combine,
+main.py:215-248) instead of COPYing the same rows a second time. The
+pipeline falls back to ``copy_write`` from the CSV-backed combined view
+when a member is missing or stale, when the group is large enough that
+only the scan validates member headers, or when the server-side
+combine fails.
+
 Reference semantics parity: pgfutter creates all-text columns in the
 ``import`` schema from the CSV header (reference README.md:51-53);
 ``copy_write`` does the same for all-string frames and maps Spark types
@@ -32,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as Tp
 
 from .jdbc import DbOptions
-from .pgwire import PgConnection, connect
+from .pgwire import PgConnection, PgError, connect
 
 _PG_TYPES: list[tuple[type, str]] = [
     (Tp.StringType, "text"),
@@ -105,6 +119,39 @@ def rows_to_copy_csv(rows: Iterable, n_cols: int) -> Iterator[bytes]:
         yield buf.getvalue().encode()
 
 
+def ensure_schema(conn: PgConnection, schema: str = "import") -> None:
+    """``CREATE SCHEMA IF NOT EXISTS``, safe under concurrent callers.
+
+    Two sessions creating the same missing schema at once can both pass
+    the IF NOT EXISTS check; the loser then fails on pg_namespace's
+    unique index (23505) or as a duplicate schema (42P06). Either error
+    means the schema exists now, which is all the caller needs."""
+    try:
+        conn.query(f'CREATE SCHEMA IF NOT EXISTS "{schema}"')
+    except PgError as e:
+        if e.fields.get("C") not in ("23505", "42P06"):
+            raise
+
+
+def combine_tables(
+    db: DbOptions, table: str, members: list[str], schema: str = "import"
+) -> None:
+    """(Re)create ``<schema>.<table>`` inside Postgres as the UNION ALL
+    of the member tables (reference main.py:215-248). The union is
+    positional, so callers must have checked that the member columns
+    match. DROP and CREATE go in one simple Query, which Postgres runs
+    as one transaction: a failure leaves the old table in place."""
+    union = " UNION ALL ".join(
+        f"SELECT * FROM {qualified(m, schema)}" for m in members
+    )
+    target = qualified(table, schema)
+    with connect(db) as conn:
+        conn.query(
+            f"DROP TABLE IF EXISTS {target}; "
+            f"CREATE TABLE {target} AS {union}"
+        )
+
+
 def copy_write(
     df: DataFrame,
     db: DbOptions,
@@ -123,7 +170,7 @@ def copy_write(
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append: {mode}")
     with connect(db) as conn:
-        conn.query(f'CREATE SCHEMA IF NOT EXISTS "{schema}"')
+        ensure_schema(conn, schema)
         if mode == "overwrite":
             conn.query(
                 f"DROP TABLE IF EXISTS {qualified(table, schema)};"
@@ -191,7 +238,9 @@ def table_counts(
 
 
 __all__ = [
+    "combine_tables",
     "copy_write",
+    "ensure_schema",
     "execute_sql",
     "table_counts",
     "rows_to_copy_csv",
