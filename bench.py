@@ -1085,16 +1085,10 @@ def _record_round(name: str) -> int:
     return int(m.group(1)) if m else -1
 
 
-def _current_round() -> int:
-    """The build's round counter (drives current-round-sidecar skip in
-    ``_prior_bench`` and the sidecar filename). Falls back high so a
-    failed import can never make us compare against our own round."""
-    try:
-        from postgresimporter_spark.plans.catalog import _ROUND
-
-        return int(_ROUND)
-    except Exception:  # noqa: BLE001
-        return 10**6
+# The bench round: names this build's sidecar (BENCH_LOCAL_r{round}.json)
+# and marks which records ``_prior_bench`` skips as the current round.
+# Bump it when a new round of bench records starts.
+_ROUND = 14
 
 
 def _prior_bench(here: Path) -> tuple[str, dict] | None:
@@ -1115,11 +1109,10 @@ def _prior_bench(here: Path) -> tuple[str, dict] | None:
     per-query overlap (r11's first record had sf1_median_basis_n 0
     for exactly this reason). The driver record remains the fallback
     when the sidecar is missing or unreadable."""
-    cur = _current_round()
     cands = [
         f
         for f in here.glob("BENCH*_r*.json")
-        if 0 <= _record_round(f.name) < cur
+        if 0 <= _record_round(f.name) < _ROUND
     ]
     # newest round first; sidecar (_LOCAL, full record) before the
     # compact official record per round
@@ -1645,7 +1638,7 @@ def main() -> None:
     # 2000-char tail.
     sidecar_name = None
     if sf == "0.1":
-        sidecar_name = f"BENCH_LOCAL_r{_current_round()}.json"
+        sidecar_name = f"BENCH_LOCAL_r{_ROUND}.json"
         try:
             (here / sidecar_name).write_text(json.dumps(out, indent=1))
         except Exception as e:  # noqa: BLE001 — emission must not die

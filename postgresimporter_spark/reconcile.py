@@ -95,24 +95,10 @@ def csv_row_counts(
     for table, files in table_csv_files.items():
         # subtract one header line per file; quoted embedded newlines
         # make line counts an approximation (exactly like the
-        # reference's wc -l fast path, csvcount.py:43-49) — the precise
-        # path is a per-group read_csv count
+        # reference's wc -l fast path, csvcount.py:43-49)
         n_lines = sum(lookup_file_count(per_file, f) for f in files)
         out[table] = max(n_lines - len(files), 0)
     return out
-
-
-def csv_row_counts_precise(
-    spark: SparkSession, table_csv_files: dict[str, list[Path]]
-) -> dict[str, int]:
-    """Precise per-group counts (quoted-newline-correct), one read per
-    group — the reference's ``precise=True`` path (csvcount.py:13-23)."""
-    from .sources.csv import read_csv_all_text
-
-    return {
-        table: read_csv_all_text(spark, files).count()
-        for table, files in table_csv_files.items()
-    }
 
 
 def db_row_counts(

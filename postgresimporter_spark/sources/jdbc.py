@@ -1,4 +1,4 @@
-"""JDBC (PostgreSQL) sink — the reference's storage target.
+"""JDBC (PostgreSQL) sink options and writer — the reference's storage target.
 
 The reference bulk-loads via pgfutter, a Go wrapper around Postgres
 ``COPY`` (Dockerfile:1-10,26). The pipeline's DEFAULT Postgres path is
@@ -9,6 +9,12 @@ driver jar is on the classpath. It approaches COPY throughput with
 ``reWriteBatchedInserts=true`` + large ``batchsize`` + one writing
 partition per executor core (SURVEY §4.3).
 
+``DbOptions`` (connection settings with the reference's env-var
+fallback) is shared by both Postgres paths; ``write_table`` is the JDBC
+write behind ``db_protocol="jdbc"``. Row-count reads and sink-side SQL
+use the COPY sink's wire-protocol client (``copy_sink.table_counts``,
+``copy_sink.execute_sql``).
+
 No JDBC driver jar ships in this container, so this module is exercised
 by unit tests only up to URL/property construction.
 """
@@ -18,7 +24,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 @dataclass
@@ -72,31 +78,3 @@ def write_table(
     """
     out = df.repartition(num_partitions) if num_partitions else df
     out.write.jdbc(db.url, f'import."{table}"', mode=mode, properties=db.properties)
-
-
-def read_table(spark: SparkSession, db: DbOptions, table: str) -> DataFrame:
-    """Read back a sink table (used by count reconciliation, O4/O5)."""
-    return spark.read.jdbc(db.url, table, properties=db.properties)
-
-
-def execute_sql(db: DbOptions, sql_text: str) -> None:
-    """Run sink-side SQL (pre/post hooks against Postgres; reference
-    exec.py:97-131 via psql). Driver-side JDBC statement; requires the
-    driver jar at runtime."""
-    from py4j.java_gateway import java_import  # noqa: F401
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("no active SparkSession")
-    jvm = spark.sparkContext._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(
-        db.url, db.user, db.password
-    )
-    from ..pipeline import split_sql_statements
-
-    try:
-        stmt = conn.createStatement()
-        for statement in split_sql_statements(sql_text):
-            stmt.execute(statement)
-    finally:
-        conn.close()

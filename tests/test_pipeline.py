@@ -516,6 +516,14 @@ def test_bench_plan_fingerprint_guard(spark):
     assert "q01_pricing_summary" not in bench._plan_diff(fps, prior)
 
 
+def test_bench_round_is_its_own_constant():
+    """The sidecar name BENCH_LOCAL_r{round}.json and the prior-round
+    skip come from bench.py's own round constant, not from the catalog."""
+    import bench
+
+    assert bench._ROUND == 14
+
+
 def test_reconciliation_failure_injection_bench_scale(
     spark, tmp_path, monkeypatch
 ):
