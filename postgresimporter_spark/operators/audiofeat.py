@@ -11,7 +11,7 @@ Honesty boundary (matches ``multimodal``): non-PCM/undecodable bytes
 raise ValueError — ``extract_audio_features`` surfaces them as nulls,
 nothing is faked.
 
-Scale: per-row mapInPandas (Arrow-batched, no shuffle); the FFT is
+Scale: per-row Arrow-batched ``rowmap.map_rows`` (no shuffle); the FFT is
 bounded at ``_MAX_SAMPLES`` so one pathological hour-long file can't
 blow a task's memory — the analysis window is the first ~1.5 s, which
 is the standard fingerprint/QC window, not a truncation surprise
@@ -24,6 +24,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
+from ..rowmap import map_rows
+
 _MAX_SAMPLES = 65536
 _ROLLOFF = 0.85
 
@@ -32,6 +34,7 @@ AUDIO_FEATURE_SCHEMA = (
     "zero_crossing_rate double, spectral_centroid_hz double, "
     "spectral_rolloff_hz double, spectral_bandwidth_hz double"
 )
+_N_FEATURES = AUDIO_FEATURE_SCHEMA.count(",")  # every column but path
 
 
 def decode_pcm(content: bytes) -> tuple[np.ndarray, int]:
@@ -112,37 +115,20 @@ def audio_features(content: bytes) -> dict:
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
-    """Per-row audio features via Arrow-batched ``mapInPandas`` —
-    constant memory per task; undecodable rows yield null feature
-    columns (log-and-continue), never task failures."""
-    import pandas as pd
+    """Per-row audio features through ``rowmap.map_rows`` — constant
+    memory per task; undecodable rows yield null feature columns
+    (log-and-continue), never task failures."""
 
-    cols = [
-        "path",
-        "duration_ms",
-        "sample_rate",
-        "rms",
-        "zero_crossing_rate",
-        "spectral_centroid_hz",
-        "spectral_rolloff_hz",
-        "spectral_bandwidth_hz",
-    ]
+    def _row(r):
+        try:
+            # audio_features' keys are in AUDIO_FEATURE_SCHEMA order
+            feats = tuple(audio_features(bytes(r["content"])).values())
+        except Exception:  # noqa: BLE001 - log-and-continue
+            feats = (None,) * _N_FEATURES
+        yield (r["path"], *feats)
 
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for _, r in pdf.iterrows():
-                row = {c: None for c in cols}
-                row["path"] = r["path"]
-                try:
-                    row.update(audio_features(bytes(r["content"])))
-                except Exception:  # noqa: BLE001 - log-and-continue
-                    pass
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return media.select("path", "content").mapInPandas(
-        _run, schema=AUDIO_FEATURE_SCHEMA
+    return map_rows(
+        media.select("path", "content"), _row, AUDIO_FEATURE_SCHEMA
     )
 
 

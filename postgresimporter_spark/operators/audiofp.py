@@ -31,7 +31,7 @@ Honesty boundary (matches ``audiofeat``): non-PCM/undecodable bytes
 yield ZERO landmark rows (log-and-continue), never task failures and
 never fabricated hashes.
 
-Scale: landmark extraction is per-row Arrow-batched ``mapInPandas``
+Scale: landmark extraction is per-row Arrow-batched ``rowmap.map_rows``
 (no shuffle until the match join); the match is a hash equi-join on
 the packed landmark over DISTINCT landmark sets (duplicate tracks —
 the re-upload shape — collapse to one value before the join and fan
@@ -48,6 +48,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..rowmap import map_rows
 
 FRAME_SAMPLES = 256
 MAX_FRAMES = 256
@@ -83,31 +85,19 @@ def landmarks_from_pcm(mono: np.ndarray, rate: int) -> list[tuple[int, int]]:
 
 
 def audio_landmarks(media: DataFrame) -> DataFrame:
-    """Per-row landmark extraction via Arrow-batched ``mapInPandas``;
+    """Per-row landmark extraction through ``rowmap.map_rows``;
     undecodable rows yield zero rows, never failures."""
-    import pandas as pd
-
     from .audiofeat import decode_pcm
 
-    def _run(batches):
-        for pdf in batches:
-            paths, ts, hashes = [], [], []
-            for _, r in pdf.iterrows():
-                try:
-                    mono, rate = decode_pcm(bytes(r["content"]))
-                except Exception:  # noqa: BLE001 - log-and-continue
-                    continue
-                for t, h in landmarks_from_pcm(mono, rate):
-                    paths.append(r["path"])
-                    ts.append(t)
-                    hashes.append(h)
-            yield pd.DataFrame(
-                {"path": paths, "t": ts, "lm_hash": hashes}
-            )
+    def _row(r):
+        try:
+            mono, rate = decode_pcm(bytes(r["content"]))
+        except Exception:  # noqa: BLE001 - log-and-continue
+            return
+        for t, h in landmarks_from_pcm(mono, rate):
+            yield r["path"], t, h
 
-    return media.select("path", "content").mapInPandas(
-        _run, schema=LANDMARK_SCHEMA
-    )
+    return map_rows(media.select("path", "content"), _row, LANDMARK_SCHEMA)
 
 
 def _landmark_values(

@@ -15,9 +15,9 @@ All from scratch on the repo's own codecs (png/gif/jpeg decoders) +
 numpy; no image library. Undecodable bytes raise ValueError — the
 multimodal honesty boundary (callers surface nulls, nothing is faked).
 
-Scale: hashing is per-row mapInPandas (Arrow-batched, no shuffle);
-the pair join is the dedup module's banded equi-join. 100 TB of
-images = one scan for hashes + one bounded-key shuffle for pairs.
+Scale: hashing is per-row through ``rowmap.map_rows`` (Arrow-batched,
+no shuffle); the pair join is the dedup module's banded equi-join.
+100 TB of images = one scan for hashes + one bounded-key shuffle for pairs.
 """
 
 from __future__ import annotations
@@ -26,6 +26,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..rowmap import map_rows
 
 PHASH_BITS = 64
 _PHASH_SIZE = 32
@@ -116,35 +118,25 @@ def phash(content: bytes) -> int:
 
 
 def image_phash(media: DataFrame, id_col: str = "path") -> DataFrame:
-    """(id, phash) for every decodable image row — Arrow-batched
-    mapInPandas, constant memory per task, no shuffle; undecodable
-    rows yield NULL phash (log-and-continue, the reference failure
-    semantics) so a corrupt file never kills the scan."""
-    import pandas as pd
-
-    # derive the output id type from the actual column (advisor r6: the
-    # old name-based guess broke any string id column not named "path")
+    """(id, phash) for every image row through the shared schema-typed
+    row mapper (``rowmap.map_rows``: Arrow-batched, constant memory per
+    task, no shuffle, ``phash`` built as nullable ``Int64`` so a NULL
+    never rounds the batch's other hashes); undecodable rows yield NULL
+    phash (log-and-continue, the reference failure semantics) so a
+    corrupt file never kills the scan."""
+    # the output id type comes from the actual column, so an id column
+    # of any name and type passes through
     id_field = media.schema[id_col].dataType.simpleString()
 
-    def _run(batches):
-        for pdf in batches:
-            hashes = []
-            for content in pdf["content"]:
-                try:
-                    hashes.append(phash(bytes(content)))
-                except Exception:  # noqa: BLE001 - log-and-continue
-                    hashes.append(None)
-            # nullable Int64: a NULL hash must not make pandas infer
-            # float64, which would round every 64-bit hash in the batch
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].to_numpy(),
-                    "phash": pd.array(hashes, dtype="Int64"),
-                }
-            )
+    def _row(r):
+        try:
+            h = phash(bytes(r["content"]))
+        except Exception:  # noqa: BLE001 - log-and-continue
+            h = None
+        yield r[id_col], h
 
-    return media.select(id_col, "content").mapInPandas(
-        _run, schema=f"id {id_field}, phash long"
+    return map_rows(
+        media.select(id_col, "content"), _row, f"id {id_field}, phash long"
     )
 
 

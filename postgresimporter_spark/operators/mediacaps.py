@@ -16,10 +16,11 @@ allocation or decompression. 100 MP (~300 MB decoded RGB) clears every
 real crawl image — 8K video frames are 33 MP, flagship-phone panoramas
 ~200 MB compressed land under 100 MP — while bounding the worst
 per-task allocation at a level a 4 GB-heap executor absorbs. The cap
-raises ``ValueError``, which the media operators' row-level failure
-semantics already convert to null-field rows (`multimodal.py`
-``_map_media_rows``) — so an over-cap image degrades to metadata-only,
-loudly visible as nulls, and the task lives. Raise the cap
+raises ``ValueError``, which the media operators' row functions
+(``multimodal.extract_features`` and friends, run through
+``rowmap.map_rows``) already convert to null-field rows — so an
+over-cap image degrades to metadata-only, loudly visible as nulls,
+and the task lives. Raise the cap
 module-wide (``mediacaps.MAX_DECODE_PIXELS = ...``) only together
 with executor memory: budget ~3 bytes/pixel output plus one
 uncompressed scanline buffer for PNG.

@@ -16,8 +16,10 @@ as nulls by extract_features' log-and-continue). No fallback path
 fabricates values. A deployment swaps in real codecs (ffmpeg/...)
 with the same (bytes) -> dict signature.
 
-Scale posture: media rows are large — ``mapInPandas`` streams Arrow
-batches so a partition never fully materializes (and the JVM->Python
+Scale posture: media rows are large — the shared row mapper
+(``rowmap.map_rows``) streams Arrow batches through ``mapInPandas`` and
+flushes its output in bounded chunks, so a partition never fully
+materializes (and the JVM->Python
 batches themselves are BYTES-bounded, not just row-bounded: Spark 4's
 ``spark.sql.execution.arrow.maxBytesPerBatch`` defaults to 64MB in
 this build — verified against SQLConf — so a batch of 10MB blobs
@@ -29,10 +31,12 @@ shuffle; only the (small) feature output is ever aggregated.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..rowmap import map_rows
 
 MEDIA_SCHEMA = (
     "path string, modality string, content binary, "
@@ -373,67 +377,26 @@ MEDIA_META_SCHEMA = (
     "width int, height int, sample_rate int, channels int, "
     "duration_ms long"
 )
-
-
-def _map_media_rows(
-    media: DataFrame, row_fn, columns: list[str], schema: str
-) -> DataFrame:
-    """Shared Arrow-batched per-row mapper for the media operators:
-    streams batches through ``mapInPandas`` (constant memory per task),
-    applying ``row_fn(row) -> dict``. Failure semantics live inside
-    ``row_fn`` (decode errors -> null fields, never task failures)."""
-
-    def _run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [row_fn(r) for _, r in pdf.iterrows()], columns=columns
-            )
-
-    return media.mapInPandas(_run, schema=schema)
+_META = ("codec", "width", "height", "sample_rate", "channels", "duration_ms")
 
 
 def extract_media_metadata(media: DataFrame) -> DataFrame:
     """Container-header metadata extraction over a binary column — the
     REAL (non-stub) half of the multimodal tier: ``parse_media_header``
-    reads actual PNG/JPEG/GIF/WAV byte layouts. Arrow-batched via the
-    shared mapper; unrecognized or truncated bytes yield null fields,
-    never task failures.
+    reads actual PNG/JPEG/GIF/WAV byte layouts. Arrow-batched through
+    ``rowmap.map_rows``; unrecognized or truncated bytes yield null
+    fields, never task failures.
     """
-    def _row(r) -> dict:
+    def _row(r):
         content = r["content"] or b""
         try:
             meta = parse_media_header(content) or {}
         except Exception:  # noqa: BLE001 - corrupt headers -> nulls
             meta = {}
-        return {
-            "path": r["path"],
-            "modality": r["modality"],
-            "n_bytes": len(content),
-            "codec": meta.get("codec"),
-            "width": meta.get("width"),
-            "height": meta.get("height"),
-            "sample_rate": meta.get("sample_rate"),
-            "channels": meta.get("channels"),
-            "duration_ms": meta.get("duration_ms"),
-        }
+        yield (r["path"], r["modality"], len(content), *map(meta.get, _META))
 
-    return _map_media_rows(
-        media,
-        _row,
-        [
-            "path",
-            "modality",
-            "n_bytes",
-            "codec",
-            "width",
-            "height",
-            "sample_rate",
-            "channels",
-            "duration_ms",
-        ],
-        MEDIA_META_SCHEMA,
+    return map_rows(
+        media.select("path", "modality", "content"), _row, MEDIA_META_SCHEMA
     )
 
 
@@ -451,7 +414,7 @@ def read_media_dir(spark: SparkSession, path_glob: str, modality: str) -> DataFr
 
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """Per-row feature extraction with an Arrow-batched pandas UDF.
+    """Per-row feature extraction through ``rowmap.map_rows``.
 
     Batches stream through ``mapInPandas`` — constant memory per task
     regardless of partition size; decode failures surface as nulls, not
@@ -459,7 +422,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     """
     import hashlib
 
-    def _row(r) -> dict:
+    def _row(r):
         content = r["content"] or b""
         try:
             decoded = DECODERS[r["modality"]](content)
@@ -467,29 +430,18 @@ def extract_features(media: DataFrame) -> DataFrame:
             # a corrupt media file must yield nulls, never fail
             # the task (reference failure semantics)
             decoded = {}
-        return {
-            "path": r["path"],
-            "modality": r["modality"],
-            "n_bytes": len(content),
-            "sha256": hashlib.sha256(content).hexdigest(),
-            "width": decoded.get("width"),
-            "height": decoded.get("height"),
-            "duration_ms": decoded.get("duration_ms"),
-        }
+        yield (
+            r["path"],
+            r["modality"],
+            len(content),
+            hashlib.sha256(content).hexdigest(),
+            decoded.get("width"),
+            decoded.get("height"),
+            decoded.get("duration_ms"),
+        )
 
-    return _map_media_rows(
-        media,
-        _row,
-        [
-            "path",
-            "modality",
-            "n_bytes",
-            "sha256",
-            "width",
-            "height",
-            "duration_ms",
-        ],
-        FEATURE_SCHEMA,
+    return map_rows(
+        media.select("path", "modality", "content"), _row, FEATURE_SCHEMA
     )
 
 
@@ -556,57 +508,43 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     duration; rows whose bytes no decoder accepts (or that decode with
     unknown timing, e.g. raw MJPEG streams) emit one offset-0 row with
     a null frame, preserving the >=1-row-per-input contract.
-    Demonstrates the row-expanding UDF shape (mapInPandas yielding
-    more rows than it receives).
+    Demonstrates the row-expanding UDF shape (a ``rowmap.map_rows`` row
+    function yielding more rows than it receives).
     """
-    def _sample(batches: Iterator) -> Iterator:
-        import pandas as pd
+    from .gif import GIF_MAGICS
+    from .mjpeg import is_avi
 
-        from .gif import GIF_MAGICS
-        from .mjpeg import is_avi
+    def _sample(r):
+        content = r["content"] or b""
+        sampled: list[tuple[int, bytes]] = []
+        if content[:6] in GIF_MAGICS:
+            try:
+                sampled = _gif_sample(content, every_ms)
+            except ValueError:
+                sampled = []  # malformed GIF: offset fallback
+        elif is_avi(content):
+            try:
+                sampled = _mjpeg_sample(content, every_ms)
+            except ValueError:
+                sampled = []  # malformed AVI: offset fallback
+        if sampled:  # frameless media falls through,
+            # preserving the >= 1 row per input contract
+            for off, png in sampled:
+                yield r["path"], off, png
+            return
+        try:
+            duration = DECODERS[r["modality"]](content).get("duration_ms")
+        except Exception:  # noqa: BLE001 - log-and-continue:
+            # unknown modality or undecodable bytes -> one
+            # frameless row, never a task failure
+            duration = None
+        for off in range(0, max(duration or 1, 1), every_ms):
+            yield r["path"], off, None
 
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                content = r["content"] or b""
-                sampled: list[tuple[int, bytes]] = []
-                if content[:6] in GIF_MAGICS:
-                    try:
-                        sampled = _gif_sample(content, every_ms)
-                    except ValueError:
-                        sampled = []  # malformed GIF: offset fallback
-                elif is_avi(content):
-                    try:
-                        sampled = _mjpeg_sample(content, every_ms)
-                    except ValueError:
-                        sampled = []  # malformed AVI: offset fallback
-                if sampled:  # frameless media falls through,
-                    # preserving the >= 1 row per input contract
-                    for off, png in sampled:
-                        rows.append(
-                            {
-                                "path": r["path"],
-                                "frame_ms": off,
-                                "frame": png,
-                            }
-                        )
-                    continue
-                try:
-                    duration = DECODERS[r["modality"]](content).get(
-                        "duration_ms"
-                    )
-                except Exception:  # noqa: BLE001 - log-and-continue:
-                    # unknown modality or undecodable bytes -> one
-                    # frameless row, never a task failure
-                    duration = None
-                for off in range(0, max(duration or 1, 1), every_ms):
-                    rows.append(
-                        {"path": r["path"], "frame_ms": off, "frame": None}
-                    )
-            yield pd.DataFrame(rows, columns=["path", "frame_ms", "frame"])
-
-    return media.mapInPandas(
-        _sample, schema="path string, frame_ms long, frame binary"
+    return map_rows(
+        media.select("path", "modality", "content"),
+        _sample,
+        "path string, frame_ms long, frame binary",
     )
 
 
@@ -705,43 +643,31 @@ def resize_media(
     """Resize: binary in -> binary out, one row per input row, target
     dims recorded in the output metadata. Both ``RESIZERS`` entries are
     real implementations (image: decode -> nearest-neighbor -> PNG;
-    video: per-frame MJPEG resize); the Arrow-batched streaming shape —
-    the part that matters at 100 TB, where output bytes can exceed
-    input bytes — yields each transformed batch without materializing
-    the partition, so peak memory is one Arrow batch of images.
+    video: per-frame MJPEG resize); the Arrow-batched streaming shape
+    of ``rowmap.map_rows`` — the part that matters at 100 TB, where
+    output bytes can exceed input bytes — yields transformed rows in
+    bounded chunks without materializing the partition, so peak memory
+    is one Arrow batch of images plus one ~64MB output chunk.
     Unsupported modalities raise (the honesty boundary, same policy as
     ``DECODERS``)."""
-    def _resize(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                fn = RESIZERS.get(r["modality"])
-                if fn is None:
-                    raise NotImplementedError(
-                        f"no resizer for modality {r['modality']!r}"
-                    )
-                rows.append(
-                    {
-                        "path": r["path"],
-                        "modality": r["modality"],
-                        "content": fn(r["content"], width, height),
-                        "width": width,
-                        "height": height,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "modality", "content", "width", "height"],
+    def _resize(r):
+        fn = RESIZERS.get(r["modality"])
+        if fn is None:
+            raise NotImplementedError(
+                f"no resizer for modality {r['modality']!r}"
             )
+        yield (
+            r["path"],
+            r["modality"],
+            fn(r["content"], width, height),
+            width,
+            height,
+        )
 
-    return media.mapInPandas(
+    return map_rows(
+        media.select("path", "modality", "content"),
         _resize,
-        schema=(
-            "path string, modality string, content binary, "
-            "width int, height int"
-        ),
+        "path string, modality string, content binary, width int, height int",
     )
 
 

@@ -1,7 +1,8 @@
 """Arrow-batched Python operators (§2.8 UDF/UDAF/UDTF surface).
 
 These are the *sanctioned* Python paths: grouped ``applyInPandas``
-(UDAF-shaped), ``mapInPandas`` (UDTF-shaped). Both stream Arrow batches —
+(UDAF-shaped), ``mapInPandas`` (UDTF-shaped, through the schema-typed
+``rowmap.map_rows``). Both stream Arrow batches —
 no row-at-a-time pickling. Used only where the computation is genuinely
 easier in Python; every numeric result is made partitioning-independent
 (fixed-point integer accumulation) so the operators stay oracle-checkable.
@@ -9,9 +10,9 @@ easier in Python; every numeric result is made partitioning-independent
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
+
+from ..rowmap import map_rows
 
 CENTROID_SCHEMA = "label int, dim int, mean_val double"
 
@@ -62,24 +63,15 @@ TOKENIZE_SCHEMA = "doc_id long, token string, position int"
 
 
 def tokenize_docs(docs: DataFrame) -> DataFrame:
-    """Row-expanding tokenizer via ``mapInPandas`` (UDTF shape): one
-    output row per (doc, token, position). Mirrors the pure-SQL
+    """Row-expanding tokenizer through ``rowmap.map_rows`` (UDTF shape):
+    one output row per (doc, token, position). Mirrors the pure-SQL
     explode(split(...)) so the Python path is differentially testable."""
-    import pandas as pd
 
-    def _tok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "token": [], "position": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = [t for t in (text or "").strip().split() if t]
-                out["doc_id"].extend([doc_id] * len(toks))
-                out["token"].extend(toks)
-                out["position"].extend(range(1, len(toks) + 1))
-            yield pd.DataFrame(out)
+    def _tok(r):
+        for pos, tok in enumerate((r["text"] or "").split(), 1):
+            yield r["doc_id"], tok, pos
 
-    return docs.select("doc_id", "text").mapInPandas(
-        _tok, schema=TOKENIZE_SCHEMA
-    )
+    return map_rows(docs.select("doc_id", "text"), _tok, TOKENIZE_SCHEMA)
 
 
 __all__ = ["label_centroids", "tokenize_docs"]

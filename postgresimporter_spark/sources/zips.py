@@ -5,18 +5,21 @@ The reference shells out to ``unzip -o src -d dest``. Driver-side
 
 For archives living on distributed storage at scale, a distributed
 variant reads them with the ``binaryFile`` source and extracts members
-inside ``mapInPandas`` so no single node must see every archive.
+through the shared per-row mapper (``rowmap.map_rows``, Arrow-batched
+``mapInPandas`` with bounded output chunks), so no single node must
+see every archive.
 """
 
 from __future__ import annotations
 
+import io
 import zipfile
-from collections.abc import Iterator
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..discovery import ZipJob
+from ..rowmap import map_rows
 
 
 def extract_zips(jobs: list[ZipJob]) -> list[Path]:
@@ -40,13 +43,6 @@ def extract_zips(jobs: list[ZipJob]) -> list[Path]:
     return done
 
 
-_EXTRACT_FLUSH_BYTES = 64 * 1024 * 1024
-# rows flush independently of bytes: a bomb variant with millions of
-# EMPTY members would otherwise grow the row buffer without ever
-# reaching the byte threshold
-_EXTRACT_FLUSH_ROWS = 100_000
-
-
 def extract_zips_distributed(
     spark: SparkSession, zip_glob: str
 ) -> DataFrame:
@@ -57,10 +53,10 @@ def extract_zips_distributed(
     come back as a ``binary`` column for downstream parsing. Scales to
     archive sets that do not fit on one node.
 
-    Failure parity with the driver path (r11 probe): a corrupt archive
-    used to throw from the Python worker and ABORT THE WHOLE JOB, where
+    Failure parity with the driver path: a corrupt archive must not
+    throw from the Python worker and abort the whole job, since
     ``extract_zips`` logs and continues (reference main.py:376-404).
-    Extraction errors are now per-archive: the bad archive emits one
+    Extraction errors are per-archive: the bad archive emits one
     marker row (``member``/``content`` NULL, ``error`` holding the
     exception text — never a silent drop; members already emitted
     before a mid-archive corruption stay, the marker flags the archive
@@ -68,65 +64,26 @@ def extract_zips_distributed(
     ``error IS NULL`` for content, ``error IS NOT NULL`` for the
     failure report.
 
-    Memory posture (same probe): extracted members are yielded in
-    ~64MB chunks instead of one pandas frame per input batch, so peak
-    worker memory tracks the chunk size plus one member, not the full
-    extracted size of every archive in the batch (a 1000:1 zip bomb
-    inflates a ~1MB archive to GBs; measured, 3x1.2GB-extracted
-    archives pass through the chunked path on the 8g probe heap).
+    Memory posture: each archive is a generator of member rows fed to
+    the shared row mapper (``rowmap.map_rows``), which flushes ~64MB
+    chunks (or 100,000 rows, so corrupt or empty members cannot grow
+    the buffer either), so peak worker memory tracks the chunk size
+    plus one member, not the full extracted size of every archive in
+    the batch (a 1000:1 zip bomb inflates a ~1MB archive to GBs).
     """
-    import pandas as pd
 
-    bin_df = spark.read.format("binaryFile").load(zip_glob)
-    cols = ["archive", "member", "content", "error"]
+    def members(r):
+        try:
+            with zipfile.ZipFile(io.BytesIO(r["content"])) as zf:
+                for name in zf.namelist():
+                    if not name.endswith("/"):
+                        yield r["path"], name, zf.read(name), None
+        except Exception as e:  # noqa: BLE001 — per-archive parity
+            yield r["path"], None, None, f"{type(e).__name__}: {e}"[:500]
 
-    def explode_members(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        rows: list[dict] = []
-        acc = 0
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                try:
-                    with zipfile.ZipFile(io.BytesIO(r["content"])) as zf:
-                        for name in zf.namelist():
-                            if name.endswith("/"):
-                                continue
-                            content = zf.read(name)
-                            rows.append(
-                                {
-                                    "archive": r["path"],
-                                    "member": name,
-                                    "content": content,
-                                    "error": None,
-                                }
-                            )
-                            acc += len(content)
-                            if (
-                                acc >= _EXTRACT_FLUSH_BYTES
-                                or len(rows) >= _EXTRACT_FLUSH_ROWS
-                            ):
-                                yield pd.DataFrame(rows, columns=cols)
-                                rows, acc = [], 0
-                except Exception as e:  # noqa: BLE001 — per-archive parity
-                    rows.append(
-                        {
-                            "archive": r["path"],
-                            "member": None,
-                            "content": None,
-                            "error": f"{type(e).__name__}: {e}"[:500],
-                        }
-                    )
-                    # error rows count against the row flush too
-                    # (ADVICE r11): a partition dominated by corrupt
-                    # archives must not grow the buffer unbounded
-                    if len(rows) >= _EXTRACT_FLUSH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows, acc = [], 0
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-    return bin_df.select("path", "content").mapInPandas(
-        explode_members,
-        schema="archive string, member string, content binary, error string",
+    archives = spark.read.format("binaryFile").load(zip_glob)
+    return map_rows(
+        archives.select("path", "content"),
+        members,
+        "archive string, member string, content binary, error string",
     )

@@ -1074,6 +1074,7 @@ def test_distributed_zip_extraction_corrupt_and_chunked(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from postgresimporter_spark import rowmap
     from postgresimporter_spark.sources import zips as Z
 
     with _zip.ZipFile(tmp_path / "good_1.zip", "w") as zf:
@@ -1092,8 +1093,8 @@ def test_distributed_zip_extraction_corrupt_and_chunked(spark, tmp_path):
 
     # chunked yields: force a tiny flush threshold and confirm content
     # is complete and exact regardless of chunk boundaries
-    old = Z._EXTRACT_FLUSH_BYTES
-    Z._EXTRACT_FLUSH_BYTES = 1
+    old = rowmap._FLUSH_BYTES
+    rowmap._FLUSH_BYTES = 1
     try:
         out2 = Z.extract_zips_distributed(spark, f"{tmp_path}/good_1.zip")
         got = {
@@ -1101,7 +1102,7 @@ def test_distributed_zip_extraction_corrupt_and_chunked(spark, tmp_path):
             for r in out2.where(F.col("error").isNull()).collect()
         }
     finally:
-        Z._EXTRACT_FLUSH_BYTES = old
+        rowmap._FLUSH_BYTES = old
     assert got == {"a.csv": b"x,y\n1,2\n", "b.csv": b"x,y\n3,4\n"}
 
 
