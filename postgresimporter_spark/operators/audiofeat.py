@@ -34,7 +34,15 @@ AUDIO_FEATURE_SCHEMA = (
     "zero_crossing_rate double, spectral_centroid_hz double, "
     "spectral_rolloff_hz double, spectral_bandwidth_hz double"
 )
-_N_FEATURES = AUDIO_FEATURE_SCHEMA.count(",")  # every column but path
+_FEATURES = (
+    "duration_ms",
+    "sample_rate",
+    "rms",
+    "zero_crossing_rate",
+    "spectral_centroid_hz",
+    "spectral_rolloff_hz",
+    "spectral_bandwidth_hz",
+)
 
 
 def decode_pcm(content: bytes) -> tuple[np.ndarray, int]:
@@ -121,11 +129,10 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
 
     def _row(r):
         try:
-            # audio_features' keys are in AUDIO_FEATURE_SCHEMA order
-            feats = tuple(audio_features(bytes(r["content"])).values())
+            feats = audio_features(bytes(r["content"]))
         except Exception:  # noqa: BLE001 - log-and-continue
-            feats = (None,) * _N_FEATURES
-        yield (r["path"], *feats)
+            feats = {}
+        yield (r["path"], *map(feats.get, _FEATURES))
 
     return map_rows(
         media.select("path", "content"), _row, AUDIO_FEATURE_SCHEMA

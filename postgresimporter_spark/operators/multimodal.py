@@ -378,14 +378,25 @@ MEDIA_META_SCHEMA = (
     "duration_ms long"
 )
 _META = ("codec", "width", "height", "sample_rate", "channels", "duration_ms")
+_INT, _LONG = 1 << 31, 1 << 63
+
+
+def _fit(v: int | None, bound: int = _INT) -> int | None:
+    """``v`` if a signed column holding [-bound, bound) can hold it,
+    else None. Header fields are outside input: a corrupt PNG IHDR, WAV
+    rate or AVI usec can hold any 32-bit value and an MP4 duration far
+    more, and a value its column cannot hold must give a NULL field,
+    not a failed task."""
+    return v if v is not None and -bound <= v < bound else None
 
 
 def extract_media_metadata(media: DataFrame) -> DataFrame:
     """Container-header metadata extraction over a binary column — the
     REAL (non-stub) half of the multimodal tier: ``parse_media_header``
     reads actual PNG/JPEG/GIF/WAV byte layouts. Arrow-batched through
-    ``rowmap.map_rows``; unrecognized or truncated bytes yield null
-    fields, never task failures.
+    ``rowmap.map_rows``; unrecognized or truncated bytes, and header
+    values their column cannot hold, yield null fields, never task
+    failures.
     """
     def _row(r):
         content = r["content"] or b""
@@ -393,7 +404,15 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
             meta = parse_media_header(content) or {}
         except Exception:  # noqa: BLE001 - corrupt headers -> nulls
             meta = {}
-        yield (r["path"], r["modality"], len(content), *map(meta.get, _META))
+        codec, *ints, duration_ms = map(meta.get, _META)
+        yield (
+            r["path"],
+            r["modality"],
+            len(content),
+            codec,
+            *map(_fit, ints),
+            _fit(duration_ms, _LONG),
+        )
 
     return map_rows(
         media.select("path", "modality", "content"), _row, MEDIA_META_SCHEMA
@@ -417,8 +436,9 @@ def extract_features(media: DataFrame) -> DataFrame:
     """Per-row feature extraction through ``rowmap.map_rows``.
 
     Batches stream through ``mapInPandas`` — constant memory per task
-    regardless of partition size; decode failures surface as nulls, not
-    task failures (log-and-continue, reference failure semantics).
+    regardless of partition size; decode failures, and decoded values
+    their ``int`` column cannot hold, surface as nulls, not task
+    failures (log-and-continue, reference failure semantics).
     """
     import hashlib
 
@@ -435,9 +455,7 @@ def extract_features(media: DataFrame) -> DataFrame:
             r["modality"],
             len(content),
             hashlib.sha256(content).hexdigest(),
-            decoded.get("width"),
-            decoded.get("height"),
-            decoded.get("duration_ms"),
+            *map(_fit, map(decoded.get, ("width", "height", "duration_ms"))),
         )
 
     return map_rows(

@@ -14,7 +14,9 @@ flushed every ``_FLUSH_BYTES`` of binary output or ``_FLUSH_ROWS`` rows
 byte threshold), so a row-expanding operator — a zip bomb, a long
 video sampled into frames — holds one chunk plus one row, not its
 whole expansion. Failure semantics stay in ``row_fn``: catch there and
-yield NULL fields or a marker row; anything that escapes fails the task.
+yield NULL fields or a marker row; anything that escapes fails the task,
+and so does a value its declared column cannot hold (2**31 in an ``int``
+column), so a row function bounds what it reads from file headers.
 
 Input rows come from Spark's own Arrow-to-pandas conversion, so a
 nullable integral input column holding a NULL arrives as float64 (NaN

@@ -182,6 +182,57 @@ def test_extract_media_metadata_distributed(spark):
     assert got["d.bin"].codec is None and got["d.bin"].n_bytes == 7
 
 
+def _huge_header_media():
+    """Header fields at the top of their byte width: a PNG IHDR width
+    and a WAV sample rate of 0xFFFFFFFF, an AVI whose usec-per-frame
+    of 0xFFFFFFFF over 501 frames gives ~2.15e9 ms, and an MP4 whose
+    mvhd gives 0xFFFFFFFF seconds."""
+    import numpy as np
+
+    from postgresimporter_spark.operators.jpeg import encode_jpeg
+    from postgresimporter_spark.operators.mediagen import mp4_bytes
+    from postgresimporter_spark.operators.mjpeg import build_avi_mjpeg
+
+    huge = 0xFFFFFFFF
+    wav = bytearray(_tiny_wav(8000, 1, 16, 8))
+    wav[24:28] = huge.to_bytes(4, "little")  # fmt sample rate
+    frame = encode_jpeg(np.full((8, 8), 90, dtype=np.uint8))
+    avi = bytearray(build_avi_mjpeg([frame] * 501, fps_milli=1000))
+    at = avi.index(b"avih") + 8
+    avi[at : at + 4] = huge.to_bytes(4, "little")  # usec per frame
+    return [
+        ("a.png", "image", _tiny_png(huge, 7), None),
+        ("b.wav", "audio", bytes(wav), None),
+        ("c.avi", "video", bytes(avi), None),
+        ("d.mp4", "video", mp4_bytes(duration_ms=huge * 1000, timescale=1), None),
+    ]
+
+
+def test_out_of_range_header_fields_give_nulls_not_failures(spark):
+    # header fields are outside input: a value its declared column
+    # cannot hold comes back NULL in its own row; it never fails the
+    # task or wraps around
+    from postgresimporter_spark.operators.multimodal import (
+        extract_media_metadata,
+    )
+
+    media = spark.createDataFrame(_huge_header_media(), MEDIA_SCHEMA)
+    meta = {r.path: r for r in extract_media_metadata(media).collect()}
+    assert (meta["a.png"].codec, meta["a.png"].width) == ("png", None)
+    assert meta["a.png"].height == 7
+    assert (meta["b.wav"].sample_rate, meta["b.wav"].channels) == (None, 1)
+    assert meta["c.avi"].width == 8  # duration_ms is a long: it fits
+    assert meta["c.avi"].duration_ms == 501 * 0xFFFFFFFF // 1000
+    assert meta["d.mp4"].duration_ms == 0xFFFFFFFF * 1000
+
+    feats = {r.path: r for r in extract_features(media).collect()}
+    assert feats["a.png"].width is None and feats["a.png"].height == 7
+    # duration_ms is an int here: ~2.15e9 and ~4.3e12 ms do not fit
+    assert (feats["c.avi"].width, feats["c.avi"].duration_ms) == (8, None)
+    assert (feats["d.mp4"].width, feats["d.mp4"].duration_ms) == (320, None)
+    assert all(r.n_bytes > 0 for r in feats.values())
+
+
 def _box(btype: bytes, body: bytes) -> bytes:
     return (8 + len(body)).to_bytes(4, "big") + btype + body
 
