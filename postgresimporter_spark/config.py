@@ -9,7 +9,13 @@ Flags map 1:1:
 - ``--disable-unzip/--disable-import/--disable-check`` stage toggles
 - ``--all``              reprocess everything (no idempotency skips)
 - ``--log-level``
-- db options             env fallback DB_NAME/DB_HOST/DB_PORT/DB_USER/DB_PASSWORD
+- db options             env fallback DB_NAME/DB_HOST/DB_PORT/DB_USER/DB_PASSWORD;
+  a db flag or ``DB_NAME`` selects the Postgres sink (wire-protocol
+  COPY, the reference's pgfutter load)
+
+Beyond the reference: ``--sink-dir``/``--bucket-by``/``--bucket-count``
+(parquet sink), ``--check-tolerance``, ``--csv-no-multiline`` and
+``--combine-allow-unverified``.
 """
 
 from __future__ import annotations
@@ -34,11 +40,9 @@ class PipelineConfig:
     process_all: bool = False
     check_tolerance: int = 100  # reference main.py:301-302 hard-codes 100
     log_level: str = "INFO"
+    # Postgres sink: every table is written with COPY FROM STDIN over
+    # the wire protocol, and hooks and row counts use the same client.
     db: DbOptions | None = None
-    # Postgres write path: "copy" = wire-protocol COPY FROM STDIN
-    # (pgfutter-class throughput, stdlib-only); "jdbc" = Spark JDBC
-    # writer (requires the driver jar on the classpath).
-    db_protocol: str = "copy"
     # Spark-native mode: materialize as temp views + optional parquet sink
     # instead of a database (no Postgres needed).
     sink_dir: Path | None = None
@@ -97,9 +101,6 @@ def parse_args(argv: list[str] | None = None) -> PipelineConfig:
         dest="combine_allow_unverified",
         action="store_true",
     )
-    p.add_argument(
-        "--db-protocol", choices=["copy", "jdbc"], default="copy"
-    )
     p.add_argument("--db-name", default=None)
     p.add_argument("--db-host", default=None)
     p.add_argument("--db-port", default=None)
@@ -111,7 +112,7 @@ def parse_args(argv: list[str] | None = None) -> PipelineConfig:
     # DB_NAME env var (the reference always has a DB target, so env vars
     # are mere per-option fallbacks there, cli.py:122-127; here a stray
     # DB_HOST in the environment must not flip a Spark-native run into
-    # JDBC writes that would abort without a driver jar).
+    # Postgres writes against a server nobody asked for).
     import os
 
     if (
@@ -142,7 +143,6 @@ def parse_args(argv: list[str] | None = None) -> PipelineConfig:
         check_tolerance=a.check_tolerance,
         log_level=a.log_level,
         db=db,
-        db_protocol=a.db_protocol,
         sink_dir=Path(a.sink_dir) if a.sink_dir else None,
         bucket_by=a.bucket_by,
         bucket_count=a.bucket_count,

@@ -29,16 +29,16 @@ def count_sources(sources: list[str | Path]) -> dict[str, int]:
     a UTF-16 dump scanned under the UTF-8 default doesn't recognize
     quote characters, so quoted embedded newlines shear into extra
     records and the "precise" count is wrong). Each file's encoding is
-    sniffed from one bounded head read (the shared ``_head_cache``
-    machinery), files are bucketed by detected charset, and each bucket
+    sniffed from one bounded head read (the shared ``_probe_heads``
+    prober), files are bucketed by detected charset, and each bucket
     is scanned ONCE with ``encoding`` set — for the overwhelmingly
     common all-UTF-8 case this is still exactly one job, and a mixed
     dump tree costs one job per distinct charset (a handful), never
     one per file. The sniff itself scales too (r14, VERDICT r13 #2):
-    64+ files fetch their heads in ONE distributed job
-    (``_probe_heads_distributed`` — only the detected charset is
-    collected, a few bytes per file) instead of the serial per-file
-    driver FS round-trips, which at ~800k dump files would serialize
+    64+ files fetch their heads in ONE distributed job (only the
+    detected charset is collected, a few bytes per file) instead of
+    the serial per-file driver FS round-trips, which at ~800k dump
+    files would serialize
     minutes-to-hours of driver I/O before any cluster work; files
     unreadable executor-side fall back to the driver-side fetch
     (Hadoop-FS path), preserving exact pre-r14 behavior per file.
@@ -52,30 +52,16 @@ def count_sources(sources: list[str | Path]) -> dict[str, int]:
     from pyspark.sql import functions as F
 
     from .reconcile import lookup_file_count, uri_count_map
-    from .sources.csv import (
-        _DISTRIBUTED_HEAD_MIN,
-        _encoding_of,
-        _head_cache,
-        _probe_heads_distributed,
-    )
+    from .sources.csv import _encoding_of, _probe_heads
 
     spark = get_spark(app_name="csvcount")
     d = discover_csvs(sources)
     files = [str(f) for f in d.dump_files]
     if not files:
         return {}
-    head_of = _head_cache(spark, None)
-    enc_of: dict[str, str] = {}
-    if len(files) >= _DISTRIBUTED_HEAD_MIN:
-        for f, (readable, enc) in _probe_heads_distributed(
-            spark, files, _encoding_of
-        ).items():
-            if readable:
-                enc_of[f] = enc
     by_enc: dict[str, list[str]] = {}
-    for f in files:
-        enc = enc_of.get(f) or _encoding_of(head_of(f))
-        by_enc.setdefault(enc, []).append(f)
+    for f, enc in _probe_heads(spark, files, _encoding_of).items():
+        by_enc.setdefault(enc or _encoding_of(None), []).append(f)
     per_file: dict[str, int] = {}
     for enc, group in by_enc.items():
         counts = (

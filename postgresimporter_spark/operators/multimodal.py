@@ -516,6 +516,12 @@ def _mjpeg_sample(content: bytes, every_ms: int) -> list[tuple[int, bytes]]:
     return out
 
 
+# Most offset rows one frameless file may yield. Its duration comes
+# from a header field, which is input, not a measurement: a 232-byte
+# MP4 can declare 0xFFFFFFFF seconds, ~4.3e9 rows at every_ms=1000.
+_MAX_FRAMELESS_OFFSETS = 10_000
+
+
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling: one output row per sampled frame offset.
 
@@ -523,9 +529,10 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     the respective decoder and each sampled row carries the frame
     actually visible at that offset, re-encoded as PNG bytes. Other
     modalities emit offset rows with null frame bytes from the decoded
-    duration; rows whose bytes no decoder accepts (or that decode with
-    unknown timing, e.g. raw MJPEG streams) emit one offset-0 row with
-    a null frame, preserving the >=1-row-per-input contract.
+    duration, at most ``_MAX_FRAMELESS_OFFSETS`` of them per file; rows
+    whose bytes no decoder accepts (or that decode with unknown timing,
+    e.g. raw MJPEG streams) emit one offset-0 row with a null frame,
+    preserving the >=1-row-per-input contract.
     Demonstrates the row-expanding UDF shape (a ``rowmap.map_rows`` row
     function yielding more rows than it receives).
     """
@@ -556,7 +563,8 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             # unknown modality or undecodable bytes -> one
             # frameless row, never a task failure
             duration = None
-        for off in range(0, max(duration or 1, 1), every_ms):
+        offsets = range(0, max(duration or 1, 1), every_ms)
+        for off in offsets[:_MAX_FRAMELESS_OFFSETS]:
             yield r["path"], off, None
 
     return map_rows(

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import logging
 import re
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -114,38 +115,13 @@ def split_sql_statements(text: str) -> list[str]:
     return [s.strip() for s in stmts if s.strip()]
 
 
-def run_sql_hooks(spark: SparkSession, scripts: list[Path]) -> None:
-    """Execute hook SQL against the session catalog (engine-native mode).
-
-    Reference exec.py:97-131 pipes scripts through psql; here each
-    statement (quote-aware split) runs through ``spark.sql``. A failing
-    statement is logged and the REST OF THE SCRIPT continues — psql's
-    default behavior, and the reference's log-and-continue semantics."""
-    for script in scripts:
-        try:
-            statements = split_sql_statements(script.read_text())
-        except Exception:  # noqa: BLE001
-            log.exception("hook script unreadable: %s", script)
-            continue
-        for stmt in statements:
-            try:
-                spark.sql(stmt)
-            except Exception:  # noqa: BLE001
-                log.exception(
-                    "hook statement failed (continuing): %s: %.80s",
-                    script,
-                    stmt,
-                )
-
-
-def run_sql_hooks_db(db, scripts: list[Path]) -> None:
-    """Execute hook SQL against the sink Postgres (reference
-    exec.py:97-131 piped scripts through psql). psql's default is
-    per-statement autocommit with continue-on-error; we reproduce that:
-    quote-and-dollar-aware split, one statement per Query, failures
-    logged and the rest of the script continues."""
-    from .sources.pgwire import connect
-
+def _run_hook_scripts(scripts: list[Path], session, label: str) -> None:
+    """The hook statement loop behind both runners. ``session()`` is a
+    context manager yielding a one-statement executor. An unreadable
+    script, a failing statement and a failed session are each logged
+    and the run continues; a failing statement does not stop the rest
+    of its script (psql's default, and the reference's log-and-continue
+    semantics)."""
     for script in scripts:
         try:
             statements = split_sql_statements(script.read_text())
@@ -153,19 +129,42 @@ def run_sql_hooks_db(db, scripts: list[Path]) -> None:
             log.exception("hook script unreadable: %s", script)
             continue
         try:
-            with connect(db) as conn:
+            with session() as execute:
                 for stmt in statements:
                     try:
-                        conn.query(stmt)
+                        execute(stmt)
                     except Exception:  # noqa: BLE001
                         log.exception(
-                            "sink hook statement failed (continuing): "
-                            "%s: %.80s",
+                            "%s statement failed (continuing): %s: %.80s",
+                            label,
                             script,
                             stmt,
                         )
         except Exception:  # noqa: BLE001
-            log.exception("sink hook connection failed: %s", script)
+            log.exception("%s connection failed: %s", label, script)
+
+
+def run_sql_hooks(spark: SparkSession, scripts: list[Path]) -> None:
+    """Execute hook SQL against the session catalog (engine-native mode).
+
+    Reference exec.py:97-131 pipes scripts through psql; here each
+    statement (quote-aware split) runs through ``spark.sql``."""
+    _run_hook_scripts(scripts, lambda: nullcontext(spark.sql), "hook")
+
+
+def run_sql_hooks_db(db, scripts: list[Path]) -> None:
+    """Execute hook SQL against the sink Postgres (reference
+    exec.py:97-131 piped scripts through psql): one wire-protocol
+    connection per script, one statement per Query, each autocommitted
+    as psql does by default."""
+    from .sources.pgwire import connect
+
+    @contextmanager
+    def session():
+        with connect(db) as conn:
+            yield conn.query
+
+    _run_hook_scripts(scripts, session, "sink hook")
 
 
 class Loader:
@@ -182,10 +181,7 @@ class Loader:
         # Step 0: pre-load hooks (main.py:312-329). With a Postgres
         # sink they run against the DB (reference semantics: psql);
         # engine-native runs use spark.sql.
-        if cfg.db is not None:
-            run_sql_hooks_db(cfg.db, _sql_scripts(cfg.pre_load))
-        else:
-            run_sql_hooks(self.spark, _sql_scripts(cfg.pre_load))
+        self._run_hooks(cfg.pre_load)
 
         # Step 1: unzip (main.py:331-332). Reference gate:
         # `disable_unzip and not all` — --all overrides the toggle.
@@ -254,10 +250,7 @@ class Loader:
             self.write_sink(result)
 
         # Step 3: post-load hooks (main.py:337-356)
-        if cfg.db is not None:
-            run_sql_hooks_db(cfg.db, _sql_scripts(cfg.post_load))
-        else:
-            run_sql_hooks(self.spark, _sql_scripts(cfg.post_load))
+        self._run_hooks(cfg.post_load)
 
         # Steps 4+5: counts + reconciliation (main.py:358-369); with a
         # Postgres sink the DB side counts come from the sink itself.
@@ -283,6 +276,13 @@ class Loader:
 
         return result
 
+    def _run_hooks(self, paths: list[Path]) -> None:
+        scripts = _sql_scripts(paths)
+        if self.config.db is not None:
+            run_sql_hooks_db(self.config.db, scripts)
+        else:
+            run_sql_hooks(self.spark, scripts)
+
     def _combine(
         self, groups: dict[str, list[Path]], result: LoadResult
     ) -> None:
@@ -303,7 +303,6 @@ class Loader:
                 df = read_csv_group(
                     self.spark,
                     files,
-                    strict_schema=True,
                     multiline=self.config.csv_multiline,
                     allow_unverified_first=(
                         self.config.combine_allow_unverified
@@ -322,13 +321,12 @@ class Loader:
         how one view is written, and how a combined table is built
         from member tables this run already wrote.
 
-        - Postgres: the default writes through the COPY wire protocol
-          (pgfutter-class throughput, no driver jar needed);
-          ``db_protocol="jdbc"`` opts into Spark's JDBC writer. On the
-          COPY path a combined table is built inside Postgres from its
-          members with ``CREATE TABLE ... AS SELECT * FROM m1 UNION ALL
-          ...`` — the reference's own combine (main.py:215-248) —
-          instead of parsing and encoding the same CSV rows twice.
+        - Postgres: every table is written through the COPY wire
+          protocol (pgfutter-class throughput, no driver jar needed).
+          A combined table is built inside Postgres from its members
+          with ``CREATE TABLE ... AS SELECT * FROM m1 UNION ALL ...``
+          — the reference's own combine (main.py:215-248) — instead of
+          parsing and encoding the same CSV rows twice.
         - Parquet: a combined table is written from its members'
           parquet files (columnar decode instead of a second CSV parse;
           measured -38% on the sf1 ingest spine).
@@ -386,8 +384,7 @@ class Loader:
                 if fut is not None:
                     fut.result()
             if (
-                combine is not None
-                and 0 < len(members) < _DISTRIBUTED_HEADER_MIN
+                0 < len(members) < _DISTRIBUTED_HEADER_MIN
                 # two files with one stem (in different directories)
                 # share one member table, which holds only one of them
                 and len(set(members)) == len(members)
@@ -418,18 +415,8 @@ class Loader:
                 fut.result()
 
     def _postgres_steps(self, result: LoadResult):
-        """(write one view, combine from members) for the Postgres sink.
-        The JDBC path has no member combine: it writes every combined
-        table from its CSV-backed view."""
+        """(write one view, combine from members) for the Postgres sink."""
         db = self.config.db
-        if self.config.db_protocol == "jdbc":
-            from .sources import jdbc
-
-            def write_jdbc(view: str, df: DataFrame) -> None:
-                jdbc.write_table(df, db, view.removeprefix("import_"))
-
-            return write_jdbc, None
-
         from .sources import copy_sink
         from .sources.pgwire import connect
 

@@ -8,10 +8,10 @@ throughput from Spark with zero non-stdlib dependencies: each partition
 opens one wire-protocol connection (``sources/pgwire.py``) and streams
 its rows through ``COPY ... FROM STDIN (FORMAT csv)``.
 
-Scale posture: the write is embarrassingly parallel — no shuffle is
-introduced unless ``num_partitions`` asks for one (cap it to bound
-connection fan-in: 1000 executors × cores would otherwise open that
-many backends). Each partition's COPY is a single implicit transaction,
+Scale posture: the write is embarrassingly parallel and introduces no
+shuffle; each non-empty partition opens one backend connection, so a
+very wide frame should be coalesced by its caller to bound connection
+fan-in. Each partition's COPY is a single implicit transaction,
 so a failed task leaves nothing behind and Spark's task retry is safe;
 with speculative execution enabled, use ``mode="append"`` into a
 staging table instead.
@@ -158,7 +158,6 @@ def copy_write(
     table: str,
     mode: str = "overwrite",
     schema: str = "import",
-    num_partitions: int | None = None,
 ) -> None:
     """Stream a DataFrame into ``<schema>.<table>`` via COPY, one
     connection per partition.
@@ -199,8 +198,7 @@ def copy_write(
                 _chain_first(first, chunks),
             )
 
-    out = df.repartition(num_partitions) if num_partitions else df
-    out.foreachPartition(_write_partition)
+    df.foreachPartition(_write_partition)
 
 
 def _chain_first(first: bytes, rest: Iterator[bytes]) -> Iterator[bytes]:

@@ -67,16 +67,10 @@ def _head_bytes(
         return None
 
 
-# Sentinel distinguishing "head not pre-fetched" from "head fetched
-# and unreadable" (None) in the head= fast-path parameters below.
-_UNFETCHED = object()
-
-
 def detect_encoding(
     path: str | Path,
     sample_size: int = 1 << 16,
     spark: SparkSession | None = None,
-    head: bytes | None | object = _UNFETCHED,
 ) -> str:
     """Charset sniff for a CSV file (reference: chardet over the first
     bytes, utils.py:12-17; chardet isn't available here, so this is the
@@ -97,18 +91,11 @@ def detect_encoding(
     Driver-side, reads at most ``sample_size`` bytes. Paths local IO
     cannot open (s3://, hdfs://, file:/ URIs — r11) return ``UTF-8``:
     Spark's own default for cluster-storage scans, and the sniff is a
-    best-effort nicety for legacy local dumps, not a gate.
-
-    ``head`` (r12) short-circuits the fetch: callers that already hold
-    the file's head sample pass it so each guard chain reads a path
-    ONCE — on cluster storage every ``_head_bytes`` fallback is a
-    Hadoop FileSystem open+read round-trip, and before this the
-    quoted-newline probe, its encoding detect, and the header check
-    each paid their own (ADVICE r11).
+    best-effort nicety for legacy local dumps, not a gate. The ingest
+    path sniffs through :func:`_probe_heads` instead, which shares one
+    head fetch per path with the other guards.
     """
-    if head is _UNFETCHED:
-        head = _head_bytes(path, sample_size, spark)
-    return _encoding_of(head, sample_size)
+    return _encoding_of(_head_bytes(path, sample_size, spark), sample_size)
 
 
 def _encoding_of(head: bytes | None, sample_size: int = 1 << 16) -> str:
@@ -148,7 +135,6 @@ def has_quoted_newline(
     path: str | Path,
     sample_size: int = 1 << 16,
     spark: SparkSession | None = None,
-    head: bytes | None | object = _UNFETCHED,
 ) -> bool:
     """Cheap per-file evidence probe for quoted embedded newlines: scan
     the first ``sample_size`` bytes with an RFC-4180 quote state machine
@@ -169,19 +155,21 @@ def has_quoted_newline(
     returns False (the assertion is the caller's; an unverifiable
     file must not abort, but it must not be silent either). The
     encoding sniff runs on the SAME head sample (r12 — previously it
-    re-fetched the head, doubling the per-file reads); pre-fetched
-    callers pass ``head`` and the probe does no IO at all."""
-    if head is _UNFETCHED:
-        head = _head_bytes(path, sample_size, spark)
+    re-fetched the head, doubling the per-file reads)."""
+    head = _head_bytes(path, sample_size, spark)
     if head is None:
-        log.warning(
-            "quoted-newline probe skipped for %s: head unreadable; "
-            "multiline=False row shearing cannot be ruled out for "
-            "this file",
-            path,
-        )
+        _warn_unprobed(path)
         return False
     return _quoted_newline_in_head(head, sample_size)
+
+
+def _warn_unprobed(path: str | Path) -> None:
+    log.warning(
+        "quoted-newline probe skipped for %s: head unreadable; "
+        "multiline=False row shearing cannot be ruled out for "
+        "this file",
+        path,
+    )
 
 
 def _quoted_newline_in_head(head: bytes, sample_size: int = 1 << 16) -> bool:
@@ -240,34 +228,57 @@ def _fetch_head_executor(path: str, sample_size: int) -> bytes | None:
 
 def _probe_heads_distributed(
     spark: SparkSession,
-    paths: list[str | Path],
+    paths: list[str],
     probe,
     sample_size: int = 1 << 16,
-) -> dict[str, tuple[bool, object]]:
+) -> dict[str, object]:
     """Run ``probe(head_bytes)`` for every path in ONE distributed job
-    and return {path: (readable, result)}. Only the probe RESULT is
-    collected (a few bytes per file), never the heads themselves —
-    collecting 64KB heads for 800k files would be ~50 GB of driver
-    memory. ``probe`` must be a picklable pure function of the head
-    bytes (e.g. ``_encoding_of``, ``_quoted_newline_in_head``). Paths
-    whose head cannot be read executor-side come back (False, None)
-    so callers fall back to their existing driver-side fetch (which
-    has the JVM Hadoop-FS path) for exactly those."""
+    and return {path: result}. Only the probe RESULT is collected (a
+    few bytes per file), never the heads themselves — collecting 64KB
+    heads for 800k files would be ~50 GB of driver memory. ``probe``
+    must be a picklable pure function of the head bytes that never
+    returns None (e.g. ``_encoding_of``, ``_quoted_newline_in_head``),
+    so None marks a head unreadable executor-side."""
     sc = spark.sparkContext
-    strs = [str(p) for p in paths]
-    n_slices = max(1, min(len(strs), sc.defaultParallelism * 4))
+    n_slices = max(1, min(len(paths), sc.defaultParallelism * 4))
 
     def one(p: str):
         head = _fetch_head_executor(p, sample_size)
-        if head is None:
-            return (p, (False, None))
-        return (p, (True, probe(head, sample_size)))
+        return (p, None if head is None else probe(head, sample_size))
 
-    sc.setJobDescription(f"head-probe: {len(strs)} files")
+    sc.setJobDescription(f"head-probe: {len(paths)} files")
     try:
-        return dict(sc.parallelize(strs, n_slices).map(one).collect())
+        return dict(sc.parallelize(paths, n_slices).map(one).collect())
     finally:
         sc.setJobDescription(None)
+
+
+def _probe_heads(
+    spark: SparkSession,
+    paths: list[str | Path],
+    probe,
+    head_of=None,
+) -> dict[str, object]:
+    """``{str(path): probe(head)}`` for every path, None where the head
+    cannot be read either way. ``_DISTRIBUTED_HEAD_MIN``+ paths probe in
+    one distributed job; the rest, and any path unreadable
+    executor-side, probe driver-side through ``head_of`` (default: a
+    fresh ``_head_cache``, which has the Hadoop-FS fallback)."""
+    keys = [str(p) for p in paths]
+    remote = (
+        _probe_heads_distributed(spark, keys, probe)
+        if len(keys) >= _DISTRIBUTED_HEAD_MIN
+        else {}
+    )
+    head_of = head_of or _head_cache(spark, None)
+    out: dict[str, object] = {}
+    for p, k in zip(paths, keys):
+        got = remote.get(k)
+        if got is None:
+            head = head_of(p)
+            got = None if head is None else probe(head, 1 << 16)
+        out[k] = got
+    return out
 
 
 def _head_cache(
@@ -292,7 +303,6 @@ def _head_cache(
 def read_csv_all_text(
     spark: SparkSession,
     paths: list[str | Path] | str | Path,
-    encoding: str | None = "auto",
     multiline: bool = True,
     _heads: dict[str, bytes | None] | None = None,
     _verify_header: list[str] | None = None,
@@ -301,11 +311,10 @@ def read_csv_all_text(
     StringType (``inferSchema`` off is Spark's default — it matches the
     reference's untyped ingest exactly).
 
-    ``encoding="auto"`` (default) sniffs the charset from the first
-    file's head bytes (the reference ran chardet per file before
-    handing pgfutter the dump, utils.py:12-17; a prefix group is one
-    dump split into parts, so one sniff covers the group). Pass an
-    explicit encoding to override, or ``None`` for Spark's default.
+    The charset is sniffed from the first file's head bytes (the
+    reference ran chardet per file before handing pgfutter the dump,
+    utils.py:12-17; a prefix group is one dump split into parts, so one
+    sniff covers the group).
 
     ``multiline=False`` is the splittability lever for newline-clean
     dumps: multiLine=True parses quoted embedded newlines correctly
@@ -331,32 +340,11 @@ def read_csv_all_text(
         paths = [paths]
     head_of = _head_cache(spark, _heads)
     if not multiline:
-        # Scale switch (r14): large path lists probe every head in ONE
-        # distributed job instead of the serial driver loop (a 10k-file
-        # newline-clean dump paid 10k sequential driver FS round-trips
-        # here before any scan planned). Paths unreadable executor-side
-        # fall back to the existing driver-side probe (Hadoop-FS path +
-        # warn-on-unreadable semantics, unchanged).
-        to_check: list[str | Path] = list(paths)
-        if len(paths) >= _DISTRIBUTED_HEAD_MIN:
-            probed = _probe_heads_distributed(
-                spark, paths, _quoted_newline_in_head
-            )
-            to_check = []
-            for p in paths:
-                readable, quoted = probed.get(str(p), (False, None))
-                if not readable:
-                    to_check.append(p)
-                elif quoted:
-                    raise ValueError(
-                        f"multiline=False asserted but {p} contains a "
-                        "quoted embedded newline in its sample window; "
-                        "line splitting would shear rows — drop "
-                        "csv_multiline=False (--csv-no-multiline) for "
-                        "this corpus"
-                    )
-        for p in to_check:
-            if has_quoted_newline(p, spark=spark, head=head_of(p)):
+        quoted = _probe_heads(spark, paths, _quoted_newline_in_head, head_of)
+        for p, q in quoted.items():
+            if q is None:
+                _warn_unprobed(p)
+            elif q:
                 raise ValueError(
                     f"multiline=False asserted but {p} contains a "
                     "quoted embedded newline in its sample window; "
@@ -364,12 +352,9 @@ def read_csv_all_text(
                     "csv_multiline=False (--csv-no-multiline) for "
                     "this corpus"
                 )
-    if encoding == "auto":
-        encoding = (
-            _encoding_of(head_of(paths[0])) if paths else None
-        )
-        if encoding == "UTF-8":
-            encoding = None  # Spark default; skip the option
+    encoding = _encoding_of(head_of(paths[0])) if paths else None
+    if encoding == "UTF-8":
+        encoding = None  # Spark default; skip the option
     reader = (
         spark.read.option("header", "true")
         # Quoted embedded newlines parse correctly (strictly better than
@@ -400,7 +385,6 @@ _DISTRIBUTED_HEADER_MIN = 64
 def read_csv_group(
     spark: SparkSession,
     files: list[Path],
-    strict_schema: bool = True,
     multiline: bool = True,
     allow_unverified_first: bool = False,
 ) -> DataFrame:
@@ -413,8 +397,8 @@ def read_csv_group(
     of N union nodes is our SURVEY §4.2 rewrite: one scan, no union
     operators in the plan, file-level parallelism for free.
 
-    ``strict_schema`` reproduces the reference's LIKE-first-file check:
-    every file's header must equal the first file's header. The check
+    Every file's header must equal the first file's header (the
+    reference's LIKE-first-file check). The check
     is deliberately STRICTER than the reference's actual failure mode:
     Postgres UNION ALL is positional, so the reference silently
     combines PERMUTED same-count all-text headers misassigned and only
@@ -457,7 +441,7 @@ def read_csv_group(
     heads: dict[str, bytes | None] = {}
     head_of = _head_cache(spark, heads)
     verify: list[str] | None = None
-    if strict_schema and len(files) > 1:
+    if len(files) > 1:
         first = _header(files[0], spark, head=head_of(files[0]))
         if len(files) >= _DISTRIBUTED_HEADER_MIN:
             if first is None:
@@ -508,6 +492,11 @@ def read_csv_group(
         _heads=heads,
         _verify_header=verify,
     )
+
+
+# Sentinel distinguishing "head not pre-fetched" from "head fetched
+# and unreadable" (None) in ``_header``'s ``head`` parameter.
+_UNFETCHED = object()
 
 
 def _header(

@@ -61,9 +61,9 @@ def stream_schema_for(spark: SparkSession, seed_file: str) -> StructType:
     subsequent file combine positionally unverified."""
     from pyspark.sql.types import StringType, StructField
 
-    from ..sources.csv import _head_cache, _header
+    from ..sources.csv import _header
 
-    cols = _header(seed_file, spark, head=_head_cache(spark, None)(seed_file))
+    cols = _header(seed_file, spark)
     if cols is None:
         raise ValueError(
             f"stream schema seed header unreadable: {seed_file}; a "

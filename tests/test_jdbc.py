@@ -1,6 +1,6 @@
-"""JDBC sink configuration (no Postgres in this environment — the write
-path is integration-gated; URL/property construction and env fallback are
-the testable contract, reference cli.py:122-127 / main.py:122-142)."""
+"""Postgres connection options (env fallback, reference cli.py:122-127)
+and the COPY sink's pure encoding layers; the live write path is in
+``test_postgres_live.py``."""
 
 from __future__ import annotations
 
@@ -14,22 +14,17 @@ def test_env_fallback(monkeypatch):
     monkeypatch.setenv("DB_USER", "envuser")
     monkeypatch.setenv("DB_PASSWORD", "envpass")
     db = DbOptions()
-    assert db.url == "jdbc:postgresql://envhost:5433/envdb"
-    assert db.properties["user"] == "envuser"
-    assert db.properties["password"] == "envpass"
+    assert (db.database, db.host, db.port) == ("envdb", "envhost", "5433")
+    assert (db.user, db.password) == ("envuser", "envpass")
 
 
 def test_cli_overrides_env(monkeypatch):
     monkeypatch.setenv("DB_NAME", "envdb")
+    monkeypatch.setenv("DB_PASSWORD", "envpass")
     db = DbOptions(database="clidb", host="h", port="1", user="u")
-    assert db.url == "jdbc:postgresql://h:1/clidb"
-
-
-def test_copy_class_batching_defaults():
-    db = DbOptions(database="d")
-    assert db.properties["reWriteBatchedInserts"] == "true"
-    assert int(db.properties["batchsize"]) >= 10000
-    assert db.properties["driver"] == "org.postgresql.Driver"
+    assert (db.database, db.host, db.port, db.user) == ("clidb", "h", "1", "u")
+    # a field the CLI leaves unset still falls back to the env
+    assert db.password == "envpass"
 
 
 def test_copy_csv_encoding():

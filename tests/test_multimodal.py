@@ -233,6 +233,37 @@ def test_out_of_range_header_fields_give_nulls_not_failures(spark):
     assert all(r.n_bytes > 0 for r in feats.values())
 
 
+def test_sample_frames_bounds_a_header_duration(spark):
+    # a 232-byte MP4 whose mvhd declares 0xFFFFFFFF seconds would
+    # yield ~4.3e9 offset rows at every_ms=1000; the frameless path
+    # caps them, still starting at 0 and stepping by every_ms
+    from pyspark.sql import functions as F
+
+    from postgresimporter_spark.operators.mediagen import mp4_bytes
+    from postgresimporter_spark.operators.multimodal import (
+        _MAX_FRAMELESS_OFFSETS,
+    )
+
+    mp4 = mp4_bytes(duration_ms=0xFFFFFFFF * 1000, timescale=1)
+    assert len(mp4) == 232
+    media = spark.createDataFrame(
+        [("d.mp4", "video", mp4, None)], MEDIA_SCHEMA
+    )
+    got = (
+        sample_frames(media, every_ms=1000)
+        .agg(
+            F.count("*").alias("n"),
+            F.min("frame_ms").alias("lo"),
+            F.max("frame_ms").alias("hi"),
+            F.count("frame").alias("frames"),
+        )
+        .first()
+    )
+    assert got.n == _MAX_FRAMELESS_OFFSETS
+    assert (got.lo, got.hi) == (0, (_MAX_FRAMELESS_OFFSETS - 1) * 1000)
+    assert got.frames == 0
+
+
 def _box(btype: bytes, body: bytes) -> bytes:
     return (8 + len(body)).to_bytes(4, "big") + btype + body
 

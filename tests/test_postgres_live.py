@@ -551,3 +551,56 @@ def test_pipeline_failed_table_does_not_stop_others(
     assert report["plants"].difference == 3
     # within the reference's tolerance of 100, so the run still passes
     assert result.check_passed
+
+
+def test_sink_hooks_continue_past_failures(pg, tmp_path, caplog):
+    """The sink-side hook runner (psql's default semantics): a failing
+    statement is logged and the rest of its script still runs; an
+    unreadable script is logged and skipped, and the next one runs; a
+    failed connection is logged, never raised."""
+    import logging
+
+    from postgresimporter_spark.pipeline import run_sql_hooks_db
+
+    first = tmp_path / "first.sql"
+    first.write_text(
+        "CREATE TABLE import.hook_a AS SELECT 1 AS one;\n"
+        "SELECT broken syntax here;\n"
+        "CREATE TABLE import.hook_b AS SELECT 2 AS two;"
+    )
+    last = tmp_path / "last.sql"
+    last.write_text("CREATE TABLE import.hook_c AS SELECT 3 AS three;")
+    with PgConnection(
+        host=pg.host, port=pg.port, database=pg.database, user=pg.user
+    ) as c:
+        ensure_schema(c)
+        c.query(
+            "DROP TABLE IF EXISTS import.hook_a, import.hook_b, "
+            "import.hook_c"
+        )
+    with caplog.at_level(logging.ERROR, logger="postgresimporter_spark"):
+        run_sql_hooks_db(pg, [first, tmp_path / "missing.sql", last])
+    with PgConnection(
+        host=pg.host, port=pg.port, database=pg.database, user=pg.user
+    ) as c:
+        assert c.scalar("SELECT one FROM import.hook_a") == "1"
+        assert c.scalar("SELECT two FROM import.hook_b") == "2"
+        assert c.scalar("SELECT three FROM import.hook_c") == "3"
+    messages = [r.getMessage() for r in caplog.records]
+    assert any("sink hook statement failed" in m for m in messages)
+    assert any(
+        "hook script unreadable" in m and "missing.sql" in m
+        for m in messages
+    )
+
+    no_server = DbOptions(
+        database="postgres", host=str(tmp_path), port=str(PG_PORT),
+        user=PG_USER,
+    )
+    caplog.clear()
+    with caplog.at_level(logging.ERROR, logger="postgresimporter_spark"):
+        run_sql_hooks_db(no_server, [last])
+    assert any(
+        "sink hook connection failed" in r.getMessage()
+        for r in caplog.records
+    )
