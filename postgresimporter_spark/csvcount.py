@@ -2,10 +2,11 @@
 postgresimporter.csvcount <source>`` prints ``{path: count}`` JSON,
 csvcount.py:53-62).
 
-Engine version counts *data rows* with a distributed CSV read (handles
-quoted newlines; strictly better than the reference's ``wc -l`` fast
-path which counted raw lines including the header — deviation documented
-in FIXTURES.md §5).
+Engine version: discovery plus the reconciliation's own counter,
+:func:`reconcile.csv_file_counts`, so the CLI and the pipeline's check
+report the same *data rows* (quoted newlines handled; the reference's
+``wc -l`` fast path counted raw lines including the header — deviation
+documented in FIXTURES.md §5).
 
 Usage: ``python -m postgresimporter_spark.csvcount <dir-or-file>...``
 """
@@ -17,68 +18,14 @@ import sys
 from pathlib import Path
 
 from .discovery import discover_csvs
+from .reconcile import csv_file_counts
 from .session import get_spark
 
 
 def count_sources(sources: list[str | Path]) -> dict[str, int]:
-    """Precise data-row count per file as one distributed job PER
-    ENCODING GROUP (r12 collapsed the per-file ``read_csv().count()``
-    loop — one Spark job setup per file, serializing on the driver at
-    10k-file scale — into a single grouped scan; r13 restores the
-    per-file encoding detection that collapse dropped, ADVICE r12:
-    a UTF-16 dump scanned under the UTF-8 default doesn't recognize
-    quote characters, so quoted embedded newlines shear into extra
-    records and the "precise" count is wrong). Each file's encoding is
-    sniffed from one bounded head read (the shared ``_probe_heads``
-    prober), files are bucketed by detected charset, and each bucket
-    is scanned ONCE with ``encoding`` set — for the overwhelmingly
-    common all-UTF-8 case this is still exactly one job, and a mixed
-    dump tree costs one job per distinct charset (a handful), never
-    one per file. The sniff itself scales too (r14, VERDICT r13 #2):
-    64+ files fetch their heads in ONE distributed job (only the
-    detected charset is collected, a few bytes per file) instead of
-    the serial per-file driver FS round-trips, which at ~800k dump
-    files would serialize
-    minutes-to-hours of driver I/O before any cluster work; files
-    unreadable executor-side fall back to the driver-side fetch
-    (Hadoop-FS path), preserving exact pre-r14 behavior per file.
-    Every scan runs ``header=false`` (header rows count
-    as records and one is subtracted per file — a header=true
-    multi-path read would merge-by-position and lose per-file identity
-    across heterogeneous files), grouped by ``input_file_name``. The
-    CSV parser handles quoted embedded newlines, keeping the data-row
-    (not raw-line) semantics. Zero-byte files never reach the grouped
-    scan and report 0."""
-    from pyspark.sql import functions as F
-
-    from .reconcile import lookup_file_count, uri_count_map
-    from .sources.csv import _encoding_of, _probe_heads
-
-    spark = get_spark(app_name="csvcount")
-    d = discover_csvs(sources)
-    files = [str(f) for f in d.dump_files]
-    if not files:
-        return {}
-    by_enc: dict[str, list[str]] = {}
-    for f, enc in _probe_heads(spark, files, _encoding_of).items():
-        by_enc.setdefault(enc or _encoding_of(None), []).append(f)
-    per_file: dict[str, int] = {}
-    for enc, group in by_enc.items():
-        counts = (
-            spark.read.option("header", "false")
-            .option("multiLine", "true")
-            .option("escape", '"')
-            .option("encoding", enc)
-            .csv(group)
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        per_file.update(uri_count_map((r.file, r.n) for r in counts))
-    return {
-        str(f): max(lookup_file_count(per_file, f) - 1, 0)
-        for f in d.dump_files
-    }
+    """Data rows per discovered CSV file, ``{path: rows}``."""
+    files = discover_csvs(sources).dump_files
+    return csv_file_counts(get_spark(app_name="csvcount"), files)
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -463,6 +463,14 @@ def extract_features(media: DataFrame) -> DataFrame:
     )
 
 
+# Most sampled rows one file may yield, on every sampling path. Frame
+# timing and durations come from header fields, which are input, not
+# measurements: a 232-byte MP4 can declare 0xFFFFFFFF seconds (~4.3e9
+# rows at every_ms=1000), and an AVI's usec-per-frame of 0xFFFFFFFF
+# makes each real frame last ~4.3e6 ms, ~4,300 decoded PNG rows each.
+_MAX_SAMPLED_OFFSETS = 10_000
+
+
 def _gif_sample(content: bytes, every_ms: int) -> list[tuple[int, bytes]]:
     """REAL frame sampling for animated GIFs: one streaming pass over
     the composited timeline (``gif.iter_gif_frames``) — O(1) frames
@@ -481,6 +489,8 @@ def _gif_sample(content: bytes, every_ms: int) -> list[tuple[int, bytes]]:
     for px, d in iter_gif_frames(content):
         last_px = px
         while d > 0 and t <= next_off < t + d:
+            if len(out) == _MAX_SAMPLED_OFFSETS:
+                return out
             out.append((next_off, encode_png(px)))
             next_off += every_ms
         t += d
@@ -508,18 +518,14 @@ def _mjpeg_sample(content: bytes, every_ms: int) -> list[tuple[int, bytes]]:
     for fr in iter_avi_mjpeg_frames(content):
         last = fr
         while d > 0 and t <= next_off < t + d:
+            if len(out) == _MAX_SAMPLED_OFFSETS:
+                return out
             out.append((next_off, encode_png(decode_jpeg(fr))))
             next_off += every_ms
         t += d
     if not out and last is not None:
         out.append((0, encode_png(decode_jpeg(last))))
     return out
-
-
-# Most offset rows one frameless file may yield. Its duration comes
-# from a header field, which is input, not a measurement: a 232-byte
-# MP4 can declare 0xFFFFFFFF seconds, ~4.3e9 rows at every_ms=1000.
-_MAX_FRAMELESS_OFFSETS = 10_000
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -529,10 +535,10 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     the respective decoder and each sampled row carries the frame
     actually visible at that offset, re-encoded as PNG bytes. Other
     modalities emit offset rows with null frame bytes from the decoded
-    duration, at most ``_MAX_FRAMELESS_OFFSETS`` of them per file; rows
-    whose bytes no decoder accepts (or that decode with unknown timing,
-    e.g. raw MJPEG streams) emit one offset-0 row with a null frame,
-    preserving the >=1-row-per-input contract.
+    duration. Every path yields at most ``_MAX_SAMPLED_OFFSETS`` rows
+    per file. Rows whose bytes no decoder accepts (or that decode with
+    unknown timing, e.g. raw MJPEG streams) emit one offset-0 row with
+    a null frame, preserving the >=1-row-per-input contract.
     Demonstrates the row-expanding UDF shape (a ``rowmap.map_rows`` row
     function yielding more rows than it receives).
     """
@@ -564,7 +570,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             # frameless row, never a task failure
             duration = None
         offsets = range(0, max(duration or 1, 1), every_ms)
-        for off in offsets[:_MAX_FRAMELESS_OFFSETS]:
+        for off in offsets[:_MAX_SAMPLED_OFFSETS]:
             yield r["path"], off, None
 
     return map_rows(

@@ -196,7 +196,7 @@ class Loader:
         d = discover_csvs(cfg.sources, cfg.exclude_regex)
         result.table_csv_files = d.table_csv_files
 
-        # Kick the reconciliation's CSV line count off NOW on a driver
+        # Kick the reconciliation's CSV row count off NOW on a driver
         # thread (r14, guide §2.6 "overlap independent jobs"): the
         # count reads the raw dump files and depends on nothing the
         # import/sink steps produce, while the sink writes' task tails
@@ -209,13 +209,19 @@ class Loader:
         if not cfg.disable_check and result.table_csv_files:
             from concurrent.futures import ThreadPoolExecutor
 
+            # looked up at call time: benchmark/tracing.py rebinds it
             from .reconcile import csv_row_counts
 
             pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="csv-count"
             )
+            # the count parses as the load does, so it splits the same
+            # way: multiline=False stays splittable within files
             csv_counts_async = pool.submit(
-                csv_row_counts, self.spark, result.table_csv_files
+                csv_row_counts,
+                self.spark,
+                result.table_csv_files,
+                cfg.csv_multiline,
             )
             pool.shutdown(wait=False)
 

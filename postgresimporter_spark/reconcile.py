@@ -4,11 +4,14 @@ The reference compares `wc -l` CSV counts against per-table
 ``SELECT count(*)`` and prints a PrettyTable; FATAL log if the summed
 absolute difference exceeds 100 (hard-coded).
 
-Engine version: counts both sides with Spark (one distributed job per
-side, not one subprocess per file), returns the report as a DataFrame,
-and documents one deliberate deviation: we count *data rows* (the CSV
-parser handles quoted newlines), where `wc -l` counted raw lines
-including the header (FIXTURES.md §5).
+Engine version: counts both sides with Spark (distributed jobs, not
+one subprocess per file) and returns the report as a DataFrame. The
+CSV side counts *data rows* by parsing each file with the loader's own
+dialect (:func:`csv_file_counts`, also behind the csvcount CLI), where
+`wc -l` counted raw lines including the header: the reference's fast
+line count and its precise ``csv.reader`` count are one path here, so
+quoted embedded newlines, blank lines and UTF-16 dumps count as they
+load (FIXTURES.md §5).
 """
 
 from __future__ import annotations
@@ -57,48 +60,63 @@ def lookup_file_count(per_file: dict[str, int], f: Path | str) -> int:
     )
 
 
-def csv_row_counts(
-    spark: SparkSession, table_csv_files: dict[str, list[Path]]
+def csv_file_counts(
+    spark: SparkSession, files: list[str | Path], multiline: bool = True
 ) -> dict[str, int]:
-    """Data-row count per combined table, as ONE distributed job over
-    every file (S9/S10 equivalent): per-group sequential counts would
-    pay one job setup per prefix group.
+    """Data rows per CSV file, ``{str(path): rows}``: the package's one
+    CSV row counter (reconciliation and the csvcount CLI).
 
-    Files are tagged by ``input_file_name`` and grouped with the same
-    prefix-derivation expression used on the driver, so group keys match
-    the discovery grouping exactly.
-    """
+    Each file's encoding is sniffed from its head through the shared
+    ``_probe_heads`` prober (one distributed job for 64+ files), and
+    each encoding's files are parsed in ONE ``header=false`` scan with
+    the loader's dialect, grouped by ``input_file_name``; one header
+    record is subtracted per file. Parsing, not line counting, is what
+    makes the count match the load: quoted embedded newlines, blank
+    lines and UTF-16 text count as the loader reads them. A header=true
+    multi-path read would merge by position and lose per-file identity,
+    so the header is counted and subtracted instead. The scan's schema
+    is pinned to one string column, so Spark runs no schema-inference
+    job. ``multiline`` follows the load (``csv_multiline``): False keeps
+    the scan splittable within files. Zero-byte files give 0."""
     from pyspark.sql import functions as F
 
-    all_files = sorted({f for fs in table_csv_files.values() for f in fs})
-    if not all_files:
-        return {}
-    # header=false: count raw lines per file, subtract the header row —
-    # a multi-path header=true read would merge-by-position and lose
-    # per-file identity for heterogeneous groups.
-    #
-    # Group by the RAW file URI (one codegen expression, ~#files
-    # groups) and map file -> table on the driver from the discovery
-    # grouping the caller already holds: deriving the table name
-    # row-side would run the naming regex chain once per LINE —
-    # measured 4x the whole job's cost at the sf1 ingest scale (7.5M
-    # lines, 12 files) for a mapping that's knowable per FILE.
-    counts = (
-        spark.read.text([str(f) for f in all_files])
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.count("*").alias("n_lines"))
-        .collect()
-    )
+    from .sources.csv import _encoding_of, _probe_heads, csv_dialect
 
-    per_file = uri_count_map((r.file, r.n_lines) for r in counts)
-    out = {}
-    for table, files in table_csv_files.items():
-        # subtract one header line per file; quoted embedded newlines
-        # make line counts an approximation (exactly like the
-        # reference's wc -l fast path, csvcount.py:43-49)
-        n_lines = sum(lookup_file_count(per_file, f) for f in files)
-        out[table] = max(n_lines - len(files), 0)
-    return out
+    keys = sorted({str(f) for f in files})
+    by_enc: dict[str, list[str]] = {}
+    for f, enc in _probe_heads(spark, keys, _encoding_of).items():
+        by_enc.setdefault(enc or "UTF-8", []).append(f)
+    per_file: dict[str, int] = {}
+    for enc, group in by_enc.items():
+        reader = spark.read.schema("_c0 string").option("header", "false")
+        counts = (
+            csv_dialect(reader, multiline, enc)
+            .csv(group)
+            .groupBy(F.input_file_name().alias("file"))
+            .agg(F.count("*").alias("n"))
+            .collect()
+        )
+        per_file.update(uri_count_map((r.file, r.n) for r in counts))
+    return {k: max(lookup_file_count(per_file, k) - 1, 0) for k in keys}
+
+
+def csv_row_counts(
+    spark: SparkSession,
+    table_csv_files: dict[str, list[Path]],
+    multiline: bool = True,
+) -> dict[str, int]:
+    """Data rows per combined table: :func:`csv_file_counts` over every
+    file at once (one scan per encoding, not one job per prefix group),
+    summed per table on the driver from the discovery grouping (a
+    per-file mapping; deriving the table row-side would run the naming
+    regex chain once per row)."""
+    per_file = csv_file_counts(
+        spark, [f for fs in table_csv_files.values() for f in fs], multiline
+    )
+    return {
+        table: sum(per_file[str(f)] for f in files)
+        for table, files in table_csv_files.items()
+    }
 
 
 def db_row_counts(

@@ -206,15 +206,6 @@ def _chain_first(first: bytes, rest: Iterator[bytes]) -> Iterator[bytes]:
     yield from rest
 
 
-def execute_sql(db: DbOptions, sql_text: str) -> None:
-    """Run a sink-side SQL script (pre/post hooks against Postgres —
-    reference exec.py:97-131 via psql). The whole script goes through
-    one simple-protocol Query: the backend does the statement
-    splitting, so dollar-quoted function bodies are safe verbatim."""
-    with connect(db) as conn:
-        conn.query(sql_text)
-
-
 def table_counts(
     db: DbOptions, tables: list[str], schema: str = "import"
 ) -> dict[str, int]:
@@ -239,7 +230,6 @@ __all__ = [
     "combine_tables",
     "copy_write",
     "ensure_schema",
-    "execute_sql",
     "table_counts",
     "rows_to_copy_csv",
     "create_table_ddl",

@@ -300,6 +300,20 @@ def _head_cache(
     return get
 
 
+def csv_dialect(reader, multiline: bool = True, encoding: str | None = None):
+    """Apply the package's one CSV dialect to a batch ``DataFrameReader``
+    or a streaming ``DataStreamReader``: RFC-4180 doubled-quote escapes,
+    quoted embedded newlines unless ``multiline=False``, and ``encoding``
+    when it is not UTF-8 (Spark's default). The loader, the row counter
+    and the streaming ingest all read through it, so they parse every
+    record the same way."""
+    reader = reader.option("multiLine", "true" if multiline else "false")
+    reader = reader.option("escape", '"')
+    if encoding and encoding != "UTF-8":
+        reader = reader.option("encoding", encoding)
+    return reader
+
+
 def read_csv_all_text(
     spark: SparkSession,
     paths: list[str | Path] | str | Path,
@@ -352,18 +366,11 @@ def read_csv_all_text(
                     "csv_multiline=False (--csv-no-multiline) for "
                     "this corpus"
                 )
-    encoding = _encoding_of(head_of(paths[0])) if paths else None
-    if encoding == "UTF-8":
-        encoding = None  # Spark default; skip the option
-    reader = (
-        spark.read.option("header", "true")
-        # Quoted embedded newlines parse correctly (strictly better than
-        # the reference's wc -l fast path; SURVEY §2.1 S10).
-        .option("multiLine", "true" if multiline else "false")
-        .option("escape", '"')
+    reader = csv_dialect(
+        spark.read.option("header", "true"),
+        multiline,
+        _encoding_of(head_of(paths[0])) if paths else None,
     )
-    if encoding:
-        reader = reader.option("encoding", encoding)
     if _verify_header is not None:
         from pyspark.sql.types import StringType, StructField, StructType
 

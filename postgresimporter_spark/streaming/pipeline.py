@@ -125,14 +125,12 @@ def stream_csv_ingest(
                 "derive one from"
             )
         schema = stream_schema_for(spark, seed_file)
-    reader = (
-        spark.readStream.schema(schema)
-        .option("header", "true")
-        # identical parse options to the batch reader (sources/csv.py):
-        # quoted embedded newlines and doubled quotes must round-trip
-        # the same way on both paths
-        .option("multiLine", "true")
-        .option("escape", '"')
+    from ..sources.csv import csv_dialect
+
+    # the batch reader's dialect: quoted embedded newlines and doubled
+    # quotes round-trip the same way on both paths
+    reader = csv_dialect(
+        spark.readStream.schema(schema).option("header", "true")
     )
     if verify_headers:
         reader = reader.option("enforceSchema", "false")

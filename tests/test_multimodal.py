@@ -241,7 +241,7 @@ def test_sample_frames_bounds_a_header_duration(spark):
 
     from postgresimporter_spark.operators.mediagen import mp4_bytes
     from postgresimporter_spark.operators.multimodal import (
-        _MAX_FRAMELESS_OFFSETS,
+        _MAX_SAMPLED_OFFSETS,
     )
 
     mp4 = mp4_bytes(duration_ms=0xFFFFFFFF * 1000, timescale=1)
@@ -259,9 +259,43 @@ def test_sample_frames_bounds_a_header_duration(spark):
         )
         .first()
     )
-    assert got.n == _MAX_FRAMELESS_OFFSETS
-    assert (got.lo, got.hi) == (0, (_MAX_FRAMELESS_OFFSETS - 1) * 1000)
+    assert got.n == _MAX_SAMPLED_OFFSETS
+    assert (got.lo, got.hi) == (0, (_MAX_SAMPLED_OFFSETS - 1) * 1000)
     assert got.frames == 0
+
+
+def test_sample_frames_bounds_a_header_frame_duration(spark):
+    # an AVI whose avih declares 0xFFFFFFFF usec per frame makes each
+    # of its 3 real frames last ~4.3e6 ms, ~12,885 decoded PNG rows at
+    # every_ms=1000; the real-frame path stops at the same cap
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from postgresimporter_spark.operators.jpeg import encode_jpeg
+    from postgresimporter_spark.operators.mjpeg import build_avi_mjpeg
+    from postgresimporter_spark.operators.multimodal import (
+        _MAX_SAMPLED_OFFSETS,
+    )
+
+    frame = encode_jpeg(np.full((8, 8), 90, dtype=np.uint8))
+    avi = bytearray(build_avi_mjpeg([frame] * 3, fps_milli=1000))
+    at = avi.index(b"avih") + 8
+    avi[at : at + 4] = (0xFFFFFFFF).to_bytes(4, "little")
+    media = spark.createDataFrame(
+        [("c.avi", "video", bytes(avi), None)], MEDIA_SCHEMA
+    )
+    got = (
+        sample_frames(media, every_ms=1000)
+        .agg(
+            F.count("*").alias("n"),
+            F.min("frame_ms").alias("lo"),
+            F.max("frame_ms").alias("hi"),
+            F.count("frame").alias("frames"),
+        )
+        .first()
+    )
+    assert got.n == got.frames == _MAX_SAMPLED_OFFSETS
+    assert (got.lo, got.hi) == (0, (_MAX_SAMPLED_OFFSETS - 1) * 1000)
 
 
 def _box(btype: bytes, body: bytes) -> bytes:

@@ -222,17 +222,6 @@ def test_csv_no_multiline_distributed_probe(spark, tmp_path):
         read_csv_all_text(spark, [*clean, dirty], multiline=False)
 
 
-def test_progress_reporter(spark):
-    from postgresimporter_spark.progress import report_progress
-
-    lines = []
-    with report_progress(spark, interval_s=0.1, sink=lines.append):
-        spark.range(10_000_000).selectExpr("sum(id)").collect()
-    # polling thread ran; lines may or may not catch an active stage on
-    # a fast job — the contract is clean start/stop without error
-    assert isinstance(lines, list)
-
-
 def test_pipeline_at_fixture_scale(spark, tmp_path):
     """Full pipeline over CSVs exported from the sf0.01 lineitem fixture:
     3 prefix-grouped files, combine, reconciliation — 60k rows."""
@@ -606,6 +595,31 @@ def test_csv_row_counts_through_symlinked_dir(spark, tmp_path):
         spark, {"animals": [link / "animals_1.csv"]}
     )
     assert counts == {"animals": 2}
+
+
+def test_reconciliation_counts_rows_as_loaded(spark, tmp_path):
+    """The CSV side of the check counts what the load parses: a quoted
+    embedded newline in every row, trailing blank lines and a UTF-16
+    dump each reconcile with zero difference."""
+    (tmp_path / "notes_1.csv").write_text(
+        "name,notes\n"
+        + "".join(f'row{i},"line one\nline two"\n' for i in range(150))
+    )
+    (tmp_path / "blanks_1.csv").write_text("name,origin\nPanda,China\n\n\n")
+    (tmp_path / "wide_1.csv").write_bytes(
+        'name,notes\nGrizzly,"likes\nsalmon"\n'.encode("utf-16")
+    )
+    cfg = PipelineConfig(sources=[tmp_path], combine_tables=True)
+    result = run_pipeline(spark, cfg)
+
+    report = {r.table: r for r in result.report.collect()}
+    assert {t: (r.csv_rows, r.db_rows) for t, r in report.items()} == {
+        "notes": (150, 150),
+        "blanks": (1, 1),
+        "wide": (1, 1),
+    }
+    assert all(r.difference == 0 for r in report.values())
+    assert result.check_passed
 
 
 def test_csv_no_multiline_flag(spark, animals_dir, tmp_path):

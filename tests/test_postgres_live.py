@@ -28,7 +28,6 @@ from postgresimporter_spark.sources import copy_sink
 from postgresimporter_spark.sources.copy_sink import (
     copy_write,
     ensure_schema,
-    execute_sql,
     table_counts,
 )
 from postgresimporter_spark.sources.jdbc import DbOptions
@@ -156,12 +155,15 @@ def test_copy_write_append_and_overwrite(spark, pg):
     assert table_counts(pg, ["never_made"]) == {"never_made": 0}
 
 
-def test_execute_sql_dollar_quoted_function(pg):
-    execute_sql(
-        pg,
+def test_sink_hooks_dollar_quoted_function(pg, tmp_path):
+    from postgresimporter_spark.pipeline import run_sql_hooks_db
+
+    hook = tmp_path / "fn.sql"
+    hook.write_text(
         "CREATE OR REPLACE FUNCTION import_live_fn() RETURNS int AS "
-        "$body$ BEGIN RETURN 5; END; $body$ LANGUAGE plpgsql;",
+        "$body$ BEGIN RETURN 5; END; $body$ LANGUAGE plpgsql;"
     )
+    run_sql_hooks_db(pg, [hook])
     with PgConnection(
         host=pg.host, port=pg.port, database=pg.database, user=pg.user
     ) as c:
