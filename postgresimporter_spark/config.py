@@ -14,8 +14,7 @@ Flags map 1:1:
   COPY, the reference's pgfutter load)
 
 Beyond the reference: ``--sink-dir``/``--bucket-by``/``--bucket-count``
-(parquet sink), ``--check-tolerance``, ``--csv-no-multiline`` and
-``--combine-allow-unverified``.
+(parquet sink), ``--check-tolerance`` and ``--csv-no-multiline``.
 """
 
 from __future__ import annotations
@@ -62,14 +61,6 @@ class PipelineConfig:
     # file size. Data with quoted newlines under False mis-splits —
     # this is the caller's assertion, not a sniffed guess.
     csv_multiline: bool = True
-    # Operator override for large-group combines whose LIKE-first
-    # header is unreadable (r13): by default such groups FAIL loudly
-    # (on the >=64-file scan-validation path the first header is the
-    # only drift guard, so combining without it is combining
-    # positionally unverified). True restores warn-and-combine for
-    # sources where the header genuinely cannot be read driver-side
-    # but the operator asserts the group is uniform.
-    combine_allow_unverified: bool = False
 
 
 def parse_args(argv: list[str] | None = None) -> PipelineConfig:
@@ -93,13 +84,6 @@ def parse_args(argv: list[str] | None = None) -> PipelineConfig:
         "--csv-no-multiline",
         dest="csv_multiline",
         action="store_false",
-    )
-    # operator's assertion that an unreadable LIKE-first header group
-    # is uniform (combines positionally unverified, warned)
-    p.add_argument(
-        "--combine-allow-unverified",
-        dest="combine_allow_unverified",
-        action="store_true",
     )
     p.add_argument("--db-name", default=None)
     p.add_argument("--db-host", default=None)
@@ -147,5 +131,4 @@ def parse_args(argv: list[str] | None = None) -> PipelineConfig:
         bucket_by=a.bucket_by,
         bucket_count=a.bucket_count,
         csv_multiline=a.csv_multiline,
-        combine_allow_unverified=a.combine_allow_unverified,
     )

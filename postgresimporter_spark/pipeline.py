@@ -294,7 +294,8 @@ class Loader:
     ) -> None:
         """Prefix combine (O1). Skips groups whose combined name collides
         with a member file's table name (reference main.py:222-226);
-        schema mismatch fails the group, logged, others continue."""
+        a schema mismatch or an unreadable member header fails the
+        group, logged, others continue."""
         for table, files in groups.items():
             member_names = {file_table_name(f) for f in files}
             # reference skips whenever the prefix equals ANY member table
@@ -307,12 +308,7 @@ class Loader:
                 continue
             try:
                 df = read_csv_group(
-                    self.spark,
-                    files,
-                    multiline=self.config.csv_multiline,
-                    allow_unverified_first=(
-                        self.config.combine_allow_unverified
-                    ),
+                    self.spark, files, multiline=self.config.csv_multiline
                 )
                 view = import_view_name(table)
                 df.createOrReplaceTempView(view)
@@ -345,17 +341,14 @@ class Loader:
         futures, so one slow file never stalls an unrelated group.
         File tasks never wait on anything, so the pool cannot deadlock.
 
-        A combined table is built from its members only when every
-        member was written THIS run (``sink_written``: a table or
-        directory left by a previous run, or one whose write failed,
-        must not stand in for this run's rows) and the group has fewer
-        than ``_DISTRIBUTED_HEADER_MIN`` members. Below that size the
-        driver-side header check in ``read_csv_group`` has verified
-        every member header exactly; at or above it, only the
-        CSV-backed view's scan validates headers, and the member path's
-        O(members) driver work would cost more than it saves. Every
-        other case, and any failure of the member path, writes the
-        combined table from its CSV-backed view, so output content
+        ``read_csv_group`` has verified every member header exactly
+        before the combined view exists, at any group size, so a
+        combined table is built from its members whenever every member
+        was written THIS run (``sink_written``: a table or directory
+        left by a previous run, or one whose write failed, must not
+        stand in for this run's rows) and no two members share a stem.
+        Every other case, and any failure of the member path, writes
+        the combined table from its CSV-backed view, so output content
         never depends on which path ran. Per-table failures are logged
         and the other tables continue (reference main.py:376-404 never
         aborts the whole run on one table)."""
@@ -368,8 +361,6 @@ class Loader:
             return
 
         from concurrent.futures import ThreadPoolExecutor
-
-        from .sources.csv import _DISTRIBUTED_HEADER_MIN
 
         def _write_one(view: str, df: DataFrame) -> None:
             try:
@@ -390,7 +381,7 @@ class Loader:
                 if fut is not None:
                     fut.result()
             if (
-                0 < len(members) < _DISTRIBUTED_HEADER_MIN
+                members
                 # two files with one stem (in different directories)
                 # share one member table, which holds only one of them
                 and len(set(members)) == len(members)
@@ -443,8 +434,7 @@ class Loader:
         ) -> None:
             # Member tables were created from their views' schemas, so
             # equal view columns mean the positional UNION ALL lines up
-            # with the combined view's columns (a header the driver
-            # could not read was only warned about, not verified).
+            # with the combined view's columns.
             for m in members:
                 if result.file_views[m].columns != csv_df.columns:
                     raise ValueError(

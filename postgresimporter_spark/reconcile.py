@@ -67,7 +67,7 @@ def csv_file_counts(
     CSV row counter (reconciliation and the csvcount CLI).
 
     Each file's encoding is sniffed from its head through the shared
-    ``_probe_heads`` prober (one distributed job for 64+ files), and
+    driver-side ``_probe_heads`` loop (one bounded read per file), and
     each encoding's files are parsed in ONE ``header=false`` scan with
     the loader's dialect, grouped by ``input_file_name``; one header
     record is subtracted per file. Parsing, not line counting, is what

@@ -1,5 +1,6 @@
 """Sources & sinks: CSV (all-text reference semantics), zip archives,
-parquet analytics tables, and the JDBC (Postgres) sink."""
+parquet analytics tables, and the COPY-protocol Postgres sink
+(``copy_sink`` over ``pgwire``)."""
 
 from .csv import read_csv_all_text, read_csv_group
 from .zips import extract_zips

@@ -24,10 +24,11 @@ standalone concurrent ``copy_write`` calls into a fresh database work
 too. A prefix-combined table whose members all landed in the same run
 is built inside Postgres by ``combine_tables`` (``CREATE TABLE ... AS
 SELECT * FROM m1 UNION ALL ...``, the reference's own combine,
-main.py:215-248) instead of COPYing the same rows a second time. The
-pipeline falls back to ``copy_write`` from the CSV-backed combined view
-when a member is missing or stale, when the group is large enough that
-only the scan validates member headers, or when the server-side
+main.py:215-248) instead of COPYing the same rows a second time; every
+member header was checked against the first before the combined view
+existed, at any group size. The pipeline falls back to ``copy_write``
+from the CSV-backed combined view when a member is missing, stale or
+failed, when two member files share one stem, or when the server-side
 combine fails.
 
 Reference semantics parity: pgfutter creates all-text columns in the

@@ -11,6 +11,7 @@ pruning/pushdown from Catalyst.
 from __future__ import annotations
 
 import logging
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -174,8 +175,7 @@ def _warn_unprobed(path: str | Path) -> None:
 
 def _quoted_newline_in_head(head: bytes, sample_size: int = 1 << 16) -> bool:
     """The byte-level probe behind :func:`has_quoted_newline` — pure
-    function of an already-fetched head sample, so it can run
-    driver-side OR inside the distributed head-probe job."""
+    function of an already-fetched head sample."""
     enc = _encoding_of(head, sample_size)
     text = head.decode(
         "utf-8" if enc == "UTF-8" else enc, errors="replace"
@@ -191,68 +191,6 @@ def _quoted_newline_in_head(head: bytes, sample_size: int = 1 << 16) -> bool:
     return False
 
 
-# Path-count threshold at which per-file head probes (the csvcount
-# encoding sniff, the multiline=False quoted-newline assert) move from
-# the serial driver-side loop to ONE distributed Spark job over the
-# path list (r14, guide §5 "the driver should do almost no data work" /
-# §6 listing costs): each driver-side head fetch is a filesystem
-# round-trip — measured 7.1ms/file against a LOCAL FS through the
-# Hadoop gateway, 30-100ms on object stores — so a 100 TB / ~800k-file
-# dump tree would serialize minutes-to-hours of driver I/O before any
-# cluster work starts. Mirrors ``_DISTRIBUTED_HEADER_MIN``; below the
-# threshold the driver loop is cheaper than a job round-trip.
-_DISTRIBUTED_HEAD_MIN = 64
-
-
-def _fetch_head_executor(path: str, sample_size: int) -> bytes | None:
-    """Executor-side head fetch: local open, falling back to pyarrow's
-    URI-dispatched FileSystem (s3://, hdfs://, file:/) — Python workers
-    have no py4j gateway, so the driver's Hadoop-FS fallback is not
-    available here. None = unreadable on the executor (the caller
-    retries driver-side; this fetch is an optimization, never a new
-    failure mode)."""
-    try:
-        with open(path, "rb") as fh:
-            return fh.read(sample_size)
-    except OSError:
-        pass
-    try:
-        from pyarrow import fs as pafs
-
-        fsys, rel = pafs.FileSystem.from_uri(str(path))
-        with fsys.open_input_stream(rel) as stream:
-            return stream.read(sample_size)
-    except Exception:  # noqa: BLE001 — unreadable means unverified
-        return None
-
-
-def _probe_heads_distributed(
-    spark: SparkSession,
-    paths: list[str],
-    probe,
-    sample_size: int = 1 << 16,
-) -> dict[str, object]:
-    """Run ``probe(head_bytes)`` for every path in ONE distributed job
-    and return {path: result}. Only the probe RESULT is collected (a
-    few bytes per file), never the heads themselves — collecting 64KB
-    heads for 800k files would be ~50 GB of driver memory. ``probe``
-    must be a picklable pure function of the head bytes that never
-    returns None (e.g. ``_encoding_of``, ``_quoted_newline_in_head``),
-    so None marks a head unreadable executor-side."""
-    sc = spark.sparkContext
-    n_slices = max(1, min(len(paths), sc.defaultParallelism * 4))
-
-    def one(p: str):
-        head = _fetch_head_executor(p, sample_size)
-        return (p, None if head is None else probe(head, sample_size))
-
-    sc.setJobDescription(f"head-probe: {len(paths)} files")
-    try:
-        return dict(sc.parallelize(paths, n_slices).map(one).collect())
-    finally:
-        sc.setJobDescription(None)
-
-
 def _probe_heads(
     spark: SparkSession,
     paths: list[str | Path],
@@ -260,24 +198,14 @@ def _probe_heads(
     head_of=None,
 ) -> dict[str, object]:
     """``{str(path): probe(head)}`` for every path, None where the head
-    cannot be read either way. ``_DISTRIBUTED_HEAD_MIN``+ paths probe in
-    one distributed job; the rest, and any path unreadable
-    executor-side, probe driver-side through ``head_of`` (default: a
-    fresh ``_head_cache``, which has the Hadoop-FS fallback)."""
-    keys = [str(p) for p in paths]
-    remote = (
-        _probe_heads_distributed(spark, keys, probe)
-        if len(keys) >= _DISTRIBUTED_HEAD_MIN
-        else {}
-    )
+    cannot be read either way. Heads come from ``head_of`` (default: a
+    fresh ``_head_cache``, which has the Hadoop-FS fallback), so a
+    caller that already fetched a path's head pays no second read."""
     head_of = head_of or _head_cache(spark, None)
     out: dict[str, object] = {}
-    for p, k in zip(paths, keys):
-        got = remote.get(k)
-        if got is None:
-            head = head_of(p)
-            got = None if head is None else probe(head, 1 << 16)
-        out[k] = got
+    for p in paths:
+        head = head_of(p)
+        out[str(p)] = None if head is None else probe(head)
     return out
 
 
@@ -319,16 +247,18 @@ def read_csv_all_text(
     paths: list[str | Path] | str | Path,
     multiline: bool = True,
     _heads: dict[str, bytes | None] | None = None,
-    _verify_header: list[str] | None = None,
 ) -> DataFrame:
     """Read CSV file(s) with the header as column names, all columns
     StringType (``inferSchema`` off is Spark's default — it matches the
     reference's untyped ingest exactly).
 
-    The charset is sniffed from the first file's head bytes (the
-    reference ran chardet per file before handing pgfutter the dump,
-    utils.py:12-17; a prefix group is one dump split into parts, so one
-    sniff covers the group).
+    The charset is sniffed per file from its head bytes (the reference
+    ran chardet per file before handing pgfutter the dump,
+    utils.py:12-17), and the files of each encoding are read in one
+    scan. A uniform group is therefore one multi-path scan; a group
+    that mixes encodings is the positional union of one scan per
+    encoding, in the order each encoding first appears, so the column
+    names still come from the first path's header.
 
     ``multiline=False`` is the splittability lever for newline-clean
     dumps: multiLine=True parses quoted embedded newlines correctly
@@ -338,18 +268,7 @@ def read_csv_all_text(
     single 435 MB file). The assertion is the caller's, but it is
     self-guarding (VERDICT r09 #5): each file's head is sample-probed
     for quoted embedded newlines and a positive raises loudly —
-    a mis-asserted dump must fail, never silently shear rows.
-
-    ``_verify_header`` (r12, the large-group path of ``read_csv_group``):
-    the given column names become an explicit all-string schema read
-    with ``enforceSchema=false``, so Spark's CSV source validates
-    EVERY file's header row against those names AT SCAN TIME —
-    executor-side, distributed, zero extra driver IO — and a drifted
-    file fails the job loudly (the same mechanism the streaming ingest
-    uses; Spark compares names case-insensitively under the default
-    ``spark.sql.caseSensitive=false``, marginally laxer than the
-    small-group driver check's exact equality, still strictly stronger
-    than the positional merge both engines would otherwise do)."""
+    a mis-asserted dump must fail, never silently shear rows."""
     if isinstance(paths, (str, Path)):
         paths = [paths]
     head_of = _head_cache(spark, _heads)
@@ -366,36 +285,25 @@ def read_csv_all_text(
                     "csv_multiline=False (--csv-no-multiline) for "
                     "this corpus"
                 )
-    reader = csv_dialect(
-        spark.read.option("header", "true"),
-        multiline,
-        _encoding_of(head_of(paths[0])) if paths else None,
-    )
-    if _verify_header is not None:
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        reader = reader.schema(
-            StructType(
-                [StructField(c, StringType()) for c in _verify_header]
-            )
-        ).option("enforceSchema", "false")
-    return reader.csv([str(p) for p in paths])
-
-
-# Group size at which the LIKE-first header check moves from the
-# serial driver-side loop (exact equality, pre-scan ValueError) to
-# scan-time validation (enforceSchema=false — distributed, zero extra
-# opens, fails at the action). See read_csv_group's Scale switch note.
-_DISTRIBUTED_HEADER_MIN = 64
+    by_enc: dict[str, list[str]] = {}
+    for p in paths:
+        by_enc.setdefault(_encoding_of(head_of(p)), []).append(str(p))
+    scans = [
+        csv_dialect(spark.read.option("header", "true"), multiline, enc).csv(
+            group
+        )
+        for enc, group in by_enc.items()
+    ]
+    return reduce(DataFrame.union, scans)
 
 
 def read_csv_group(
     spark: SparkSession,
     files: list[Path],
     multiline: bool = True,
-    allow_unverified_first: bool = False,
 ) -> DataFrame:
-    """Read a prefix group of CSVs as ONE scan (the combine operator O1).
+    """Read a prefix group of CSVs as ONE scan (the combine operator O1;
+    one scan per encoding when the group mixes encodings).
 
     The reference combines per-file Postgres tables with
     ``CREATE TABLE ... (LIKE first) INCLUDING ALL`` + ``UNION ALL``
@@ -415,90 +323,38 @@ def read_csv_group(
     count drift doesn't even error: measured, a dropped column
     null-pads and a gained column truncates, both silently. Exact
     header equality is therefore the only drift guard in the plan, so
-    it must actually run: headers unreadable by local IO (s3://,
-    hdfs://) fall back to a driver-side read through the JVM's Hadoop
-    FileSystem (one ~KB open per file, no Spark jobs), and a file
-    whose header cannot be read either way is WARNED about by name —
-    never silently waved through.
-
-    Scale switch (r12): the driver-side loop is SERIAL — measured
-    7.1ms/file even against a local FS through the Hadoop gateway, so
-    an S3-class 30-100ms open turns a 10,000-file group into minutes
-    of driver time before the scan plans. Groups of
-    ``_DISTRIBUTED_HEADER_MIN``+ files therefore read ONE header (the
-    LIKE-first file, driver-side) and push the per-file comparison
-    into the scan itself via an explicit schema +
-    ``enforceSchema=false`` — executor-side, distributed, zero extra
-    opens; a drifted file fails the ACTION loudly instead of the plan
-    (the reference's UNION ALL also failed at execution,
-    main.py:247). Small groups keep the pre-scan loop and its exact
-    ValueError.
-
-    Unreadable LIKE-first header at scale (r13, VERDICT r12 #3): on
-    the distributed-validation path the first file's header IS the
-    only drift guard — there is no per-file driver loop behind it. An
-    unreadable first header therefore RAISES instead of warning (the
-    pre-r13 behavior combined the whole 64+-file group positionally
-    after one log line — exactly the group size where silent
-    mis-assignment costs the most). ``allow_unverified_first=True`` is
-    the explicit operator override, restoring the warn-and-combine
-    behavior for sources where the header genuinely cannot be read
-    driver-side but the operator asserts the group is uniform.
+    it must actually run, before the scan and for every member at any
+    group size. Headers unreadable by local IO (s3://, hdfs://) fall
+    back to a driver-side read through the JVM's Hadoop FileSystem
+    (one bounded head read per file, shared with the encoding sniff
+    and the quoted-newline probe; no Spark jobs). A member whose
+    header cannot be read either way fails the group with a
+    ``ValueError`` naming it: unverified, it would combine
+    positionally without error.
     """
     heads: dict[str, bytes | None] = {}
     head_of = _head_cache(spark, heads)
-    verify: list[str] | None = None
     if len(files) > 1:
-        first = _header(files[0], spark, head=head_of(files[0]))
-        if len(files) >= _DISTRIBUTED_HEADER_MIN:
+        first: list[str] | None = None
+        for f in files:
+            cols = _header(f, spark, head=head_of(f))
+            if cols is None:
+                raise ValueError(
+                    f"combine header check impossible: header of {f} "
+                    "unreadable, so it cannot be checked against the "
+                    "LIKE-first header and a drifted file would combine "
+                    "positionally without error (reference "
+                    "LIKE-first-file semantics, main.py:229)"
+                )
             if first is None:
-                if not allow_unverified_first:
-                    raise ValueError(
-                        f"combine header check impossible for "
-                        f"{len(files)}-file group: LIKE-first header "
-                        f"of {files[0]} unreadable, so drifted headers "
-                        "would combine positionally without error; "
-                        "fix the file or pass "
-                        "allow_unverified_first=True to combine "
-                        "unverified (reference LIKE-first-file "
-                        "semantics, main.py:229)"
-                    )
-                log.warning(
-                    "combine header check skipped for %s: LIKE-first "
-                    "header unreadable; drifted headers in this group "
-                    "would combine positionally without error "
-                    "(allow_unverified_first override set)",
-                    files[0],
+                first = cols
+            elif cols != first:
+                raise ValueError(
+                    f"schema mismatch combining {f}: {cols} != "
+                    f"{first} (reference LIKE-first-file "
+                    "semantics, main.py:247)"
                 )
-            else:
-                verify = first
-        else:
-            unverifiable = [files[0]] if first is None else []
-            for f in files[1:]:
-                cols = _header(f, spark, head=head_of(f))
-                if cols is None:
-                    unverifiable.append(f)
-                    continue
-                if first is not None and cols != first:
-                    raise ValueError(
-                        f"schema mismatch combining {f}: {cols} != "
-                        f"{first} (reference LIKE-first-file "
-                        "semantics, main.py:247)"
-                    )
-            for f in unverifiable:
-                log.warning(
-                    "combine header check skipped for %s: header "
-                    "unreadable; a permuted or drifted header in this "
-                    "file would combine positionally without error",
-                    f,
-                )
-    return read_csv_all_text(
-        spark,
-        files,
-        multiline=multiline,
-        _heads=heads,
-        _verify_header=verify,
-    )
+    return read_csv_all_text(spark, files, multiline=multiline, _heads=heads)
 
 
 # Sentinel distinguishing "head not pre-fetched" from "head fetched

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import re
 import zipfile
 from pathlib import Path
 
@@ -164,18 +165,15 @@ def test_csvcount_mixed_encodings(spark, tmp_path, capsys):
 
 
 def test_csvcount_distributed_head_sniff(spark, tmp_path, capsys):
-    """At 64+ files (``_DISTRIBUTED_HEAD_MIN``) csvcount fetches every
-    head in ONE distributed job instead of the serial per-file driver
-    loop (r14, VERDICT r13 #2). Same per-file encoding detection, same
-    counts — including a UTF-16 file whose quoted newline must not
-    shear — just fetched executor-side."""
+    """A 64-file tree: csvcount sniffs every file's encoding from its
+    own head, so a UTF-16 file among 63 UTF-8 ones counts right (its
+    quoted newline must not shear) and every file is counted."""
     import codecs
     import json
 
     from postgresimporter_spark.csvcount import main as csvcount_main
-    from postgresimporter_spark.sources.csv import _DISTRIBUTED_HEAD_MIN
 
-    n = _DISTRIBUTED_HEAD_MIN
+    n = 64
     for i in range(n - 1):
         (tmp_path / f"t{i:03d}_1.csv").write_text(f"h\nrow{i}\n")
     text = 'h,notes\nalpha,"line1\nline2"\nbeta,plain\n'
@@ -193,18 +191,15 @@ def test_csvcount_distributed_head_sniff(spark, tmp_path, capsys):
 
 
 def test_csv_no_multiline_distributed_probe(spark, tmp_path):
-    """The multiline=False quoted-newline assert also scale-switches
-    at 64+ paths to one distributed head-probe job (r14): a dirty file
-    hidden in a large group still raises LOUDLY, and an all-clean
-    large group loads split with correct rows."""
+    """The multiline=False quoted-newline assert probes every path of
+    a 64-path read: a dirty file hidden in a large group still raises
+    LOUDLY, and an all-clean large group loads split with correct
+    rows."""
     import pytest
 
-    from postgresimporter_spark.sources.csv import (
-        _DISTRIBUTED_HEAD_MIN,
-        read_csv_all_text,
-    )
+    from postgresimporter_spark.sources.csv import read_csv_all_text
 
-    n = _DISTRIBUTED_HEAD_MIN
+    n = 64
     clean = []
     for i in range(n):
         p = tmp_path / f"c{i:03d}.csv"
@@ -622,6 +617,37 @@ def test_reconciliation_counts_rows_as_loaded(spark, tmp_path):
     assert result.check_passed
 
 
+def test_combine_mixed_encoding_group(spark, tmp_path):
+    """A prefix group whose members differ in encoding combines to
+    exactly its members' rows: each member is decoded with its own
+    sniffed charset, so a UTF-16 member (with a quoted newline) next
+    to a UTF-8 one yields neither NUL-interleaved text nor extra
+    rows, and the reconciliation difference is 0."""
+    (tmp_path / "pets_1.csv").write_text(
+        "name,notes\nRex,dog\nTom,cat\n"
+    )
+    (tmp_path / "pets_2.csv").write_bytes(
+        'name,notes\nPolly,"talks\na lot"\nNemo,fish\n'.encode("utf-16")
+    )
+    result = run_pipeline(
+        spark, PipelineConfig(sources=[tmp_path], combine_tables=True)
+    )
+
+    views = {**result.file_views, **result.combined_views}
+
+    def rows(view):
+        return sorted(tuple(r) for r in views[view].collect())
+
+    assert views["import_pets"].columns == ["name", "notes"]
+    assert rows("import_pets") == sorted(
+        rows("import_pets_1") + rows("import_pets_2")
+    )
+    assert ("Polly", "talks\na lot") in rows("import_pets")
+    report = {r.table: r for r in result.report.collect()}
+    assert (report["pets"].csv_rows, report["pets"].db_rows) == (4, 4)
+    assert report["pets"].difference == 0
+
+
 def test_csv_no_multiline_flag(spark, animals_dir, tmp_path):
     """csv_multiline=False (the splittability lever for newline-clean
     dumps) loads the same rows on clean data and is reachable from the
@@ -898,17 +924,15 @@ def test_head_guards_one_read_per_path_and_utf16_remote(
 
 
 def test_combine_header_check_distributed_large_group(spark, tmp_path):
-    """r12 scale switch: at _DISTRIBUTED_HEADER_MIN+ files the
-    LIKE-first check moves off the serial driver loop (measured
-    7.1ms/file through the Hadoop gateway — minutes at 10k S3 files)
-    into the scan itself via enforceSchema=false: a drifted file fails
-    the ACTION loudly, executor-side, with no per-file driver opens; a
-    clean group reads identically to the small-group path."""
+    """A 70-file group takes the same pre-scan LIKE-first check as a
+    2-file one: a clean group reads whole with the first file's names,
+    and a drifted member fails ``read_csv_group`` itself with the exact
+    schema-mismatch ValueError."""
     import pytest
 
     from postgresimporter_spark.sources import csv as C
 
-    n = C._DISTRIBUTED_HEADER_MIN + 6
+    n = 64 + 6
     good = tmp_path / "big"
     good.mkdir()
     files = []
@@ -919,31 +943,19 @@ def test_combine_header_check_distributed_large_group(spark, tmp_path):
         f.write_text(f"a,b,c\n{i},2,3\n{i},4,5\n")
         files.append(f)
 
-    calls = []
-    real = C._head_bytes
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(
-            C,
-            "_head_bytes",
-            lambda p, nn, s=None: (calls.append(str(p)) or real(p, nn, s)),
-        )
-        df = C.read_csv_group(spark, files)
-        assert df.columns == ["a", "b", "c"]  # names from LIKE-first
-        assert df.count() == 2 * n
-        # only the LIKE-first header was fetched driver-side
-        assert calls == [str(files[0])]
+    df = C.read_csv_group(spark, files)
+    assert df.columns == ["a", "b", "c"]  # names from LIKE-first
+    assert df.count() == 2 * n
 
-    # drifted member: the check fires at the action, loudly
+    # drifted member: the pre-scan check raises, at any group size
     files[n // 2].write_text("c,a,b\n30,10,20\n")
-    with pytest.raises(Exception, match="(?i)header|conform"):
-        C.read_csv_group(spark, files).count()
-
-    # small groups keep the pre-scan exact-equality ValueError
+    with pytest.raises(ValueError, match="schema mismatch"):
+        C.read_csv_group(spark, files)
     with pytest.raises(ValueError, match="schema mismatch"):
         C.read_csv_group(spark, [files[0], files[n // 2]])
 
     # end-to-end pipeline parity: a drifted LARGE group must stay
-    # log-and-continue — the sink write fails (logged), the combined
+    # log-and-continue — the combine fails (logged), the combined
     # view never lands in sink_written, reconciliation counts it 0
     # via the db_row_counts fallback, and the gate FAILS loudly while
     # the run completes (reference: combine failure -> diff reported).
@@ -962,17 +974,16 @@ def test_combine_header_check_distributed_large_group(spark, tmp_path):
 
 
 def test_combine_utf16_large_group_scan_validation(spark, tmp_path):
-    """r13 probe pin: the >=64-file scan-time header validation and the
-    encoding sniff compose — a UTF-16 prefix group combines with true
-    column names and values, and a drifted UTF-16 member still fails
-    the action loudly."""
+    """The header check and the encoding sniff compose on a 66-file
+    group: a UTF-16 prefix group combines with true column names and
+    values, and a drifted UTF-16 member still fails loudly."""
     import codecs
 
     import pytest
 
     from postgresimporter_spark.sources import csv as C
 
-    n = C._DISTRIBUTED_HEADER_MIN + 2
+    n = 64 + 2
     d = tmp_path / "u16grp"
     d.mkdir()
     for i in range(n):
@@ -986,24 +997,21 @@ def test_combine_utf16_large_group_scan_validation(spark, tmp_path):
     (d / f"u_{n // 2:03d}.csv").write_bytes(
         codecs.BOM_UTF16_LE + "b,a\nx,0\n".encode("utf-16-le")
     )
-    with pytest.raises(Exception, match="(?i)header|conform|failed_read"):
-        C.read_csv_group(spark, files).count()
+    with pytest.raises(ValueError, match="schema mismatch"):
+        C.read_csv_group(spark, files)
 
 
 def test_combine_unreadable_likefirst_large_group_fails_loudly(
     spark, tmp_path
 ):
-    """r13 (VERDICT r12 #3): on the >=64-file distributed-validation
-    path the LIKE-first header IS the only drift guard, so an
-    unreadable first header must RAISE — the pre-r13 warn-and-combine
-    left exactly the largest groups combining positionally unguarded.
-    The explicit allow_unverified_first override restores the old
-    behavior for operators who assert uniformity."""
+    """An unreadable member header fails the group, naming the file,
+    at any group size: combining it would be combining positionally
+    unverified. Checked on a 66-file group and on a 2-file group."""
     import pytest
 
     from postgresimporter_spark.sources import csv as C
 
-    n = C._DISTRIBUTED_HEADER_MIN + 2
+    n = 64 + 2
     d = tmp_path / "biggrp"
     d.mkdir()
     bad = d / "t_000.csv"
@@ -1015,22 +1023,20 @@ def test_combine_unreadable_likefirst_large_group_fails_loudly(
         files.append(f)
     with pytest.raises(ValueError, match="LIKE-first header"):
         C.read_csv_group(spark, files)
-    # explicit override: warn-and-combine (empty dir contributes 0 rows)
-    df = C.read_csv_group(spark, files, allow_unverified_first=True)
-    assert df.count() == n - 1
+    # 2-file groups take the same rule, whichever member is unreadable
+    for pair in ([bad, files[1]], [files[1], bad]):
+        with pytest.raises(ValueError, match=re.escape(str(bad))):
+            C.read_csv_group(spark, pair)
 
 
 def test_combined_sink_threshold_boundary(spark, tmp_path):
-    """r13 (VERDICT r12 #8): the combined-sink write switches strategy
-    exactly at _DISTRIBUTED_HEADER_MIN members (below: parquet
-    fast path re-reading member tables; at/above: one CSV-backed
-    multi-path scan). Both sides of the boundary must write the SAME
-    combined table for clean groups, and both must stay loud on a
-    drifted member (combine fails, reconciliation reports the diff)."""
-    from postgresimporter_spark.sources.csv import _DISTRIBUTED_HEADER_MIN
-
+    """Groups of 63 and 64 members (the size where the combined-sink
+    write once switched strategy) must write the SAME combined table
+    for clean groups, and both must stay loud on a drifted member
+    (combine fails, reconciliation reports the diff)."""
+    size = 64
     combined: dict[int, list] = {}
-    for n in (_DISTRIBUTED_HEADER_MIN - 1, _DISTRIBUTED_HEADER_MIN):
+    for n in (size - 1, size):
         # distinct table prefix per scenario: each run registers
         # import_<prefix> views in the shared session catalog, and a
         # stale same-named view from an earlier run would satisfy the
@@ -1052,14 +1058,14 @@ def test_combined_sink_threshold_boundary(spark, tmp_path):
         assert got.columns == ["a", "b"]
         combined[n] = sorted((row.a, row.b) for row in got.collect())
     # identical combined tables either side of the switch
-    expect_small = [(str(i), "x") for i in range(_DISTRIBUTED_HEADER_MIN - 1)]
-    assert combined[_DISTRIBUTED_HEADER_MIN - 1] == sorted(expect_small)
-    assert combined[_DISTRIBUTED_HEADER_MIN] == sorted(
-        expect_small + [(str(_DISTRIBUTED_HEADER_MIN - 1), "x")]
+    expect_small = [(str(i), "x") for i in range(size - 1)]
+    assert combined[size - 1] == sorted(expect_small)
+    assert combined[size] == sorted(
+        expect_small + [(str(size - 1), "x")]
     )
 
     # drifted member: loud on BOTH sides of the boundary
-    for n in (_DISTRIBUTED_HEADER_MIN - 1, _DISTRIBUTED_HEADER_MIN):
+    for n in (size - 1, size):
         src = tmp_path / f"drift_{n}"
         src.mkdir()
         for i in range(n):

@@ -397,14 +397,12 @@ def test_pipeline_combines_in_db_like_csv_union(spark, pg, tmp_path, monkeypatch
 def test_pipeline_large_group_combines_through_copy(
     spark, pg, tmp_path, monkeypatch
 ):
-    """Groups of _DISTRIBUTED_HEADER_MIN files are combined by COPY from
-    the CSV-backed view, never inside Postgres, so the scan-time header
-    validation still runs: a clean group lands whole, and a permuted
-    member header fails its combined write, with the reconciliation
-    reporting the missing rows."""
-    from postgresimporter_spark.sources.csv import _DISTRIBUTED_HEADER_MIN
-
-    n = _DISTRIBUTED_HEADER_MIN
+    """64-file groups take the same path as small ones: every member
+    header is checked before the combined view exists, so a clean
+    group is combined inside Postgres from its member tables, and a
+    permuted member header fails the combine before anything is
+    written, with the reconciliation reporting the missing rows."""
+    n = 64
     files = {}
     for prefix in ("big", "wide"):
         for i in range(n):
@@ -415,8 +413,8 @@ def test_pipeline_large_group_combines_through_copy(
     result = run_pipeline(
         spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
     )
-    assert calls["combine"] == []
-    assert {"big", "wide"} <= set(calls["copy"])
+    assert calls["combine"] == ["wide"]
+    assert not {"big", "wide"} & set(calls["copy"])
     assert "import_wide" in result.sink_written
     assert _rows(pg, "wide") == sorted(
         ((str(i), v) for i in range(n) for v in "xy"), key=repr
@@ -424,12 +422,11 @@ def test_pipeline_large_group_combines_through_copy(
     assert "import_big" not in result.sink_written
     # every member landed on its own
     assert {f"import_big_{i:03d}" for i in range(n)} <= result.sink_written
-    # the partition holding the permuted file rolled back its COPY;
-    # partitions that finished first may have committed theirs
+    # no combined table at all: nothing partly committed
     report = {r.table: r for r in result.report.collect()}
     assert report["big"].csv_rows == 2 * n
-    assert report["big"].db_rows <= 2 * n - 2
-    assert report["big"].difference == 2 * n - report["big"].db_rows
+    assert report["big"].db_rows == 0
+    assert report["big"].difference == 2 * n
 
 
 def _fail_before_ddl(real_copy, df, db, table):
