@@ -341,12 +341,15 @@ class Loader:
         futures, so one slow file never stalls an unrelated group.
         File tasks never wait on anything, so the pool cannot deadlock.
 
-        ``read_csv_group`` has verified every member header exactly
-        before the combined view exists, at any group size, so a
-        combined table is built from its members whenever every member
-        was written THIS run (``sink_written``: a table or directory
-        left by a previous run, or one whose write failed, must not
-        stand in for this run's rows) and no two members share a stem.
+        Every view takes its columns from its file's header
+        (``read_csv_all_text``), and ``read_csv_group`` has verified
+        every member header equal to the first before the combined view
+        exists, at any group size. Member tables therefore hold the
+        combined view's columns by construction, and a combined table
+        is built from its members whenever every member was written
+        THIS run (``sink_written``: a table or directory left by a
+        previous run, or one whose write failed, must not stand in for
+        this run's rows) and no two members share a stem.
         Every other case, and any failure of the member path, writes
         the combined table from its CSV-backed view, so output content
         never depends on which path ran. Per-table failures are logged
@@ -354,7 +357,7 @@ class Loader:
         aborts the whole run on one table)."""
         cfg = self.config
         if cfg.db is not None:
-            write_view, combine = self._postgres_steps(result)
+            write_view, combine = self._postgres_steps()
         elif cfg.sink_dir is not None:
             write_view, combine = self._parquet_steps()
         else:
@@ -411,7 +414,7 @@ class Loader:
             for fut in [*file_futures.values(), *combined_futures]:
                 fut.result()
 
-    def _postgres_steps(self, result: LoadResult):
+    def _postgres_steps(self):
         """(write one view, combine from members) for the Postgres sink."""
         db = self.config.db
         from .sources import copy_sink
@@ -432,14 +435,12 @@ class Loader:
         def combine_in_db(
             view: str, members: list[str], csv_df: DataFrame
         ) -> None:
-            # Member tables were created from their views' schemas, so
-            # equal view columns mean the positional UNION ALL lines up
-            # with the combined view's columns.
-            for m in members:
-                if result.file_views[m].columns != csv_df.columns:
-                    raise ValueError(
-                        f"member {m} columns differ from {view}"
-                    )
+            """Build the combined table as the positional UNION ALL of
+            its member tables. Each member table was created from its
+            view's columns, and every view takes its columns from its
+            file's header, which ``read_csv_group`` checked equal to
+            the first member's: the union lines up with the combined
+            view's columns by construction."""
             copy_sink.combine_tables(
                 db,
                 view.removeprefix("import_"),
@@ -475,23 +476,13 @@ class Loader:
         def combine_from_parquet(
             view: str, members: list[str], csv_df: DataFrame
         ) -> None:
+            # Member parquet columns are their files' checked-equal
+            # headers (see combine_in_db), so one multi-path scan, not
+            # an O(members) unionByName fold; the select pins the order.
             paths = [str(cfg.sink_dir / m) for m in members]
-            cols = csv_df.columns
-            # Member parquet columns ARE the file's header (per-file
-            # views read header=true), so exact positional equality
-            # re-checks header drift at footer cost. Without it,
-            # parquet's by-name resolution would silently "fix" a
-            # PERMUTED member.
-            for m, p in zip(members, paths):
-                got = self.spark.read.parquet(p).columns
-                if got != cols:
-                    raise ValueError(
-                        f"member {m} columns {got} != {cols} "
-                        "(LIKE-first drift; reference main.py:247)"
-                    )
-            # one multi-path scan, not an O(members) unionByName fold
-            # (columns verified equal, so the select pins their order)
-            write_parquet(view, self.spark.read.parquet(*paths).select(*cols))
+            write_parquet(
+                view, self.spark.read.parquet(*paths).select(*csv_df.columns)
+            )
 
         return write_parquet, combine_from_parquet
 

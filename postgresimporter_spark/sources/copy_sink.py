@@ -24,17 +24,20 @@ standalone concurrent ``copy_write`` calls into a fresh database work
 too. A prefix-combined table whose members all landed in the same run
 is built inside Postgres by ``combine_tables`` (``CREATE TABLE ... AS
 SELECT * FROM m1 UNION ALL ...``, the reference's own combine,
-main.py:215-248) instead of COPYing the same rows a second time; every
-member header was checked against the first before the combined view
-existed, at any group size. The pipeline falls back to ``copy_write``
-from the CSV-backed combined view when a member is missing, stale or
-failed, when two member files share one stem, or when the server-side
-combine fails.
+main.py:215-248) instead of COPYing the same rows a second time. Every
+view takes its columns from its file's header, and every member header
+was checked equal to the first before the combined view existed, at
+any group size, so the positional union lines up by construction. The
+pipeline falls back to ``copy_write`` from the CSV-backed combined view
+when a member is missing, stale or failed, when two member files share
+one stem, or when the server-side combine fails.
 
 Reference semantics parity: pgfutter creates all-text columns in the
 ``import`` schema from the CSV header (reference README.md:51-53);
 ``copy_write`` does the same for all-string frames and maps Spark types
-to Postgres types for typed frames.
+to Postgres types for typed frames. Header cells are arbitrary text, so
+every identifier in the generated SQL goes through ``quote_ident``: a
+cell holding ``"`` or ``;`` names one column and runs no SQL.
 """
 
 from __future__ import annotations
@@ -74,15 +77,23 @@ def pg_type_for(dt: Tp.DataType) -> str:
     return "text"
 
 
+def quote_ident(name: str) -> str:
+    """A Postgres quoted identifier: ``name`` inside ``"…"`` with every
+    ``"`` doubled, so a header cell or table name is always exactly one
+    identifier and never ends the quoting early."""
+    return '"' + name.replace('"', '""') + '"'
+
+
 def qualified(table: str, schema: str = "import") -> str:
-    return f'"{schema}"."{table}"'
+    return f"{quote_ident(schema)}.{quote_ident(table)}"
 
 
 def create_table_ddl(
     df: DataFrame, table: str, schema: str = "import"
 ) -> str:
     cols = ", ".join(
-        f'"{f.name}" {pg_type_for(f.dataType)}' for f in df.schema.fields
+        f"{quote_ident(f.name)} {pg_type_for(f.dataType)}"
+        for f in df.schema.fields
     )
     return f"CREATE TABLE {qualified(table, schema)} ({cols})"
 
@@ -128,7 +139,7 @@ def ensure_schema(conn: PgConnection, schema: str = "import") -> None:
     unique index (23505) or as a duplicate schema (42P06). Either error
     means the schema exists now, which is all the caller needs."""
     try:
-        conn.query(f'CREATE SCHEMA IF NOT EXISTS "{schema}"')
+        conn.query(f"CREATE SCHEMA IF NOT EXISTS {quote_ident(schema)}")
     except PgError as e:
         if e.fields.get("C") not in ("23505", "42P06"):
             raise

@@ -10,11 +10,16 @@ pruning/pushdown from Catalyst.
 
 from __future__ import annotations
 
+import csv as _csv
+import io
 import logging
+from collections import Counter
 from functools import reduce
+from itertools import chain, dropwhile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 log = logging.getLogger(__name__)
 
@@ -68,14 +73,10 @@ def _head_bytes(
         return None
 
 
-def detect_encoding(
-    path: str | Path,
-    sample_size: int = 1 << 16,
-    spark: SparkSession | None = None,
-) -> str:
-    """Charset sniff for a CSV file (reference: chardet over the first
-    bytes, utils.py:12-17; chardet isn't available here, so this is the
-    deterministic stdlib equivalent):
+def _encoding_of(head: bytes | None, sample_size: int = 1 << 16) -> str:
+    """Charset of a CSV file from its head sample (reference: chardet
+    over the first bytes, utils.py:12-17; chardet isn't available here,
+    so this is the deterministic stdlib equivalent):
 
     1. BOM → the BOM's encoding (UTF-8/16/32, either endianness).
     2. NUL-byte periodicity → BOM-less UTF-16: mostly-Latin text in
@@ -89,19 +90,9 @@ def detect_encoding(
     4. otherwise → ``ISO-8859-1`` (decodes any byte sequence; the
        standard fallback for legacy single-byte dumps).
 
-    Driver-side, reads at most ``sample_size`` bytes. Paths local IO
-    cannot open (s3://, hdfs://, file:/ URIs — r11) return ``UTF-8``:
-    Spark's own default for cluster-storage scans, and the sniff is a
-    best-effort nicety for legacy local dumps, not a gate. The ingest
-    path sniffs through :func:`_probe_heads` instead, which shares one
-    head fetch per path with the other guards.
-    """
-    return _encoding_of(_head_bytes(path, sample_size, spark), sample_size)
-
-
-def _encoding_of(head: bytes | None, sample_size: int = 1 << 16) -> str:
-    """The byte-level sniff behind :func:`detect_encoding` — pure
-    function of an already-fetched head sample (None = unreadable)."""
+    A pure function of an already-fetched head (``_probe_heads`` and
+    ``_head_cache`` fetch it, once per path). An unreadable head
+    (None) gives ``UTF-8``, Spark's own default."""
     if head is None:
         return "UTF-8"
     for bom, enc in _BOMS:
@@ -132,54 +123,15 @@ def _encoding_of(head: bytes | None, sample_size: int = 1 << 16) -> str:
         return "ISO-8859-1"
 
 
-def has_quoted_newline(
-    path: str | Path,
-    sample_size: int = 1 << 16,
-    spark: SparkSession | None = None,
-) -> bool:
-    """Cheap per-file evidence probe for quoted embedded newlines: scan
-    the first ``sample_size`` bytes with an RFC-4180 quote state machine
-    and report whether any newline occurs INSIDE a quoted field. Used to
-    guard the ``multiline=False`` splittability lever — the caller
-    asserts the dump is newline-clean, and this catches a mis-asserted
-    dump loudly instead of letting Hadoop line-splitting silently
-    shear rows (the reference's ``wc -l`` fast count had the same
-    blind spot but also a precise fallback, csvcount.py:26-50).
-
-    Best-effort by construction: evidence past the sample window is
-    not seen (documented; a positive is always real evidence). Driver-
-    side, one small read per file — metadata-scale. Non-local paths
-    read through the Hadoop FileSystem when a session is provided
-    (r11 — before that, the guard silently skipped itself on exactly
-    the storage where 100 TB dumps live, the same hole the LIKE-first
-    header check had); a path unreadable BOTH ways logs a warning and
-    returns False (the assertion is the caller's; an unverifiable
-    file must not abort, but it must not be silent either). The
-    encoding sniff runs on the SAME head sample (r12 — previously it
-    re-fetched the head, doubling the per-file reads)."""
-    head = _head_bytes(path, sample_size, spark)
-    if head is None:
-        _warn_unprobed(path)
-        return False
-    return _quoted_newline_in_head(head, sample_size)
-
-
-def _warn_unprobed(path: str | Path) -> None:
-    log.warning(
-        "quoted-newline probe skipped for %s: head unreadable; "
-        "multiline=False row shearing cannot be ruled out for "
-        "this file",
-        path,
-    )
-
-
 def _quoted_newline_in_head(head: bytes, sample_size: int = 1 << 16) -> bool:
-    """The byte-level probe behind :func:`has_quoted_newline` — pure
-    function of an already-fetched head sample."""
-    enc = _encoding_of(head, sample_size)
-    text = head.decode(
-        "utf-8" if enc == "UTF-8" else enc, errors="replace"
-    )
+    """Whether a newline occurs INSIDE a quoted field of the head
+    sample (an RFC-4180 quote state machine over the decoded head).
+    It guards the ``multiline=False`` splittability lever: the caller
+    asserts the dump is newline-clean, and this catches a mis-asserted
+    dump loudly instead of letting Hadoop line splitting silently shear
+    rows. Best-effort by construction: evidence past the sample window
+    is not seen, but a positive is always real evidence."""
+    text = head.decode(_encoding_of(head, sample_size), errors="replace")
     in_q = False
     for ch in text:
         if ch == '"':
@@ -249,16 +201,24 @@ def read_csv_all_text(
     _heads: dict[str, bytes | None] | None = None,
 ) -> DataFrame:
     """Read CSV file(s) with the header as column names, all columns
-    StringType (``inferSchema`` off is Spark's default — it matches the
-    reference's untyped ingest exactly).
+    StringType (the reference's untyped ingest).
+
+    The columns come from the driver's parse of the first path's
+    header (:func:`_header`, from the cached head sample), named by
+    Spark's own rule for CSV headers (:func:`_view_schema`). Spark then
+    reads with that explicit schema and ``header=true``, so it only
+    skips each file's header record: building a view runs no Spark
+    job, and the view's columns are the ones the combine check
+    compared. A zero-byte file gives a view with no columns; a first
+    path whose header is unreadable every way raises a ``ValueError``
+    naming it.
 
     The charset is sniffed per file from its head bytes (the reference
     ran chardet per file before handing pgfutter the dump,
     utils.py:12-17), and the files of each encoding are read in one
     scan. A uniform group is therefore one multi-path scan; a group
     that mixes encodings is the positional union of one scan per
-    encoding, in the order each encoding first appears, so the column
-    names still come from the first path's header.
+    encoding, in the order each encoding first appears.
 
     ``multiline=False`` is the splittability lever for newline-clean
     dumps: multiLine=True parses quoted embedded newlines correctly
@@ -276,7 +236,12 @@ def read_csv_all_text(
         quoted = _probe_heads(spark, paths, _quoted_newline_in_head, head_of)
         for p, q in quoted.items():
             if q is None:
-                _warn_unprobed(p)
+                log.warning(
+                    "quoted-newline probe skipped for %s: head unreadable; "
+                    "multiline=False row shearing cannot be ruled out for "
+                    "this file",
+                    p,
+                )
             elif q:
                 raise ValueError(
                     f"multiline=False asserted but {p} contains a "
@@ -285,16 +250,41 @@ def read_csv_all_text(
                     "csv_multiline=False (--csv-no-multiline) for "
                     "this corpus"
                 )
+    header = _header(paths[0], spark, head_of(paths[0]), multiline)
+    if header is None:
+        raise ValueError(f"header of {paths[0]} unreadable")
+    schema = _view_schema(spark, header)
     by_enc: dict[str, list[str]] = {}
     for p in paths:
         by_enc.setdefault(_encoding_of(head_of(p)), []).append(str(p))
     scans = [
-        csv_dialect(spark.read.option("header", "true"), multiline, enc).csv(
-            group
-        )
+        csv_dialect(
+            spark.read.schema(schema).option("header", "true"), multiline, enc
+        ).csv(group)
         for enc, group in by_enc.items()
     ]
     return reduce(DataFrame.union, scans)
+
+
+def _view_schema(spark: SparkSession, header: list[str]) -> StructType:
+    """All-string schema for a parsed header, named by Spark's rule for
+    CSV headers (``CSVUtils.makeSafeHeader``), so a view's columns are
+    the ones Spark's header inference would give: an empty name becomes
+    ``_c{i}``, and a name that occurs more than once becomes
+    ``{name}{i}`` — compared case-insensitively unless
+    ``spark.sql.caseSensitive`` is set (``a,A,a,b`` → ``a0,A1,a2,b``)."""
+    exact = spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
+    key = (lambda n: n) if exact else str.lower
+    seen = Counter(key(n) for n in header)
+    return StructType(
+        [
+            StructField(
+                f"_c{i}" if not n else f"{n}{i}" if seen[key(n)] > 1 else n,
+                StringType(),
+            )
+            for i, n in enumerate(header)
+        ]
+    )
 
 
 def read_csv_group(
@@ -330,14 +320,16 @@ def read_csv_group(
     and the quoted-newline probe; no Spark jobs). A member whose
     header cannot be read either way fails the group with a
     ``ValueError`` naming it: unverified, it would combine
-    positionally without error.
+    positionally without error. The headers compared are the ones
+    every per-file and combined view takes its columns from, so equal
+    headers mean equal view columns.
     """
     heads: dict[str, bytes | None] = {}
     head_of = _head_cache(spark, heads)
     if len(files) > 1:
         first: list[str] | None = None
         for f in files:
-            cols = _header(f, spark, head=head_of(f))
+            cols = _header(f, spark, head_of(f), multiline)
             if cols is None:
                 raise ValueError(
                     f"combine header check impossible: header of {f} "
@@ -362,83 +354,73 @@ def read_csv_group(
 _UNFETCHED = object()
 
 
+def _empty_line(line: str) -> bool:
+    return not line.rstrip("\r\n")
+
+
+def _space_line(line: str) -> bool:
+    return not line.rstrip("\r\n").strip(" ")
+
+
+def _record_ends(text: str) -> bool:
+    """Whether the first record of ``text`` ends at an UNQUOTED line
+    break inside it. A quoted field whose closing quote lies past the
+    end holds newlines yet is cut short, and csv.reader would return
+    the partial record without raising."""
+    in_q = False
+    for ch in text:
+        if ch == '"':
+            in_q = not in_q
+        elif ch in "\r\n" and not in_q:
+            return True
+    return False
+
+
 def _header(
     path: str | Path,
     spark: SparkSession | None = None,
     head: bytes | None | object = _UNFETCHED,
+    multiline: bool = True,
 ) -> list[str] | None:
-    """First-line header from the bounded ~64KB head sample — no Spark
-    job per file (a per-file spark.read just to compare headers
-    serializes N job setups on the driver), and (r12) no IO at all
+    """The raw header cells of a CSV file: its first non-blank record,
+    parsed with csv.reader on the driver. Every view's columns
+    (:func:`read_csv_all_text`), the combine check and the streaming
+    schema come from it, so they cannot disagree.
+
+    Blank leading records are skipped as Spark's header inference
+    skips them: with ``multiline`` an empty line (univocity's rule),
+    without it a line of spaces only (line mode trims spaces), so
+    ``\\r\\nid,name`` has the header ``id,name`` either way. A file
+    holding no record (zero bytes, or blank lines only) gives ``[]``.
+
+    The header is parsed from the bounded ~64KB head sample, decoded
+    with the encoding sniffed from the same bytes, with no IO at all
     when the caller pre-fetched ``head``. Paths local IO cannot open
     (s3://, hdfs://, file:/ URIs) read through the JVM's Hadoop
-    FileSystem inside ``_head_bytes`` when a session is provided —
-    still driver-side, one BOUNDED read (an unbounded readLine would
-    buffer a giant single-line file — a binary misnamed .csv — whole
-    into the JVM), so the LIKE-first check holds on cluster storage
-    where 100 TB inputs actually live.
-
-    The sample is decoded with the encoding DETECTED FROM THE SAME
-    BYTES — before r12 the Hadoop-FS branch hardcoded utf-8, so a
-    UTF-16 prefix group whose later files took the remote path
-    produced garbled headers and a spurious schema-mismatch raise
-    (loud false positive; ADVICE r11) — and csv.reader parses the
-    first record (quoted embedded newlines inside the header parse
-    correctly as long as the record completes within the sample). A
-    first record that does NOT complete inside the sample falls back
-    to an unbounded LOCAL read when the path is locally openable (a
-    legitimate >64KB header), else returns None. Returns None only
-    when the header is unreadable every way (callers must treat that
-    as unverified, not as verified)."""
-    import csv as _csv
-    import io
-
+    FileSystem inside ``_head_bytes`` when a session is provided, so
+    the LIKE-first check holds on cluster storage. The sample parse is
+    trusted only when the first record provably completes inside it
+    (the sample holds the whole file, or an unquoted line break ends
+    the record); otherwise a LOCAL path is read on to the end of that
+    record (a legitimate >64KB header). Returns None only when the
+    header is unreadable every way (a remote header longer than the
+    sample, or a path that cannot be opened): callers must treat that
+    as unverified."""
     if head is _UNFETCHED:
         head = _head_bytes(path, 1 << 16, spark)
+    if head is None:
+        return None
     enc = _encoding_of(head, 1 << 16)
-    if head:
-        try:
-            text = head.decode("utf-8" if enc == "UTF-8" else enc)
-        except UnicodeDecodeError:
-            # the sample boundary can shear a multi-byte sequence; the
-            # header sits at the start, so replacing the torn tail is
-            # safe for first-record parsing
-            text = head.decode(
-                "utf-8" if enc == "UTF-8" else enc, errors="replace"
-            )
-        text = text.lstrip("﻿")
-        # The sample parse is trusted only when the first RECORD
-        # provably completes inside it: either the sample holds the
-        # whole file, or an UNQUOTED newline terminates the record.
-        # "\n" in text alone is not enough (ADVICE r12) — a quoted
-        # header field with an embedded newline whose closing quote
-        # falls past the sample boundary contains newlines yet is
-        # truncated, and csv.reader silently returns the partial
-        # record instead of raising.
-        sample_full = len(head) == (1 << 16)
-        in_q = False
-        complete = not sample_full
-        if not complete:
-            for ch in text:
-                if ch == '"':
-                    in_q = not in_q
-                elif ch == "\n" and not in_q:
-                    complete = True
-                    break
-        if complete:
-            try:
-                return next(_csv.reader(io.StringIO(text)))
-            except StopIteration:
-                return None
-    # first record did not complete inside the sample (or the head was
-    # unreadable): a full LOCAL read stays bounded by the record
-    # itself; remote paths report unverified rather than guess
+    blank = _empty_line if multiline else _space_line
+    # a sheared multi-byte sequence at the sample's end only touches
+    # text after the header, so replacing it is safe here
+    text = head.decode(enc, errors="replace").lstrip("\ufeff")
+    rest = "".join(dropwhile(blank, io.StringIO(text, newline="")))
+    if len(head) < 1 << 16 or _record_ends(rest):
+        return next(_csv.reader(io.StringIO(rest, newline="")), [])
     try:
-        with open(
-            path,
-            newline="",
-            encoding="utf-8-sig" if enc == "UTF-8" else enc,
-        ) as fh:
-            return next(_csv.reader(fh))
-    except (OSError, StopIteration, UnicodeDecodeError, ValueError):
+        with open(path, newline="", encoding=enc, errors="replace") as fh:
+            lines = chain([next(fh, "").lstrip("\ufeff")], fh)
+            return next(_csv.reader(dropwhile(blank, lines)), [])
+    except (OSError, _csv.Error):
         return None

@@ -81,8 +81,8 @@ def test_uppercase_zip_ignored(tmp_path):
     assert discover_zips([tmp_path]) == []
 
 
-def test_detect_encoding(tmp_path):
-    from postgresimporter_spark.sources.csv import detect_encoding
+def test_detect_encoding(spark, tmp_path):
+    from postgresimporter_spark.sources.csv import _encoding_of, _probe_heads
 
     cases = {
         "ascii.csv": ("ab,cd\n1,2\n".encode("ascii"), "UTF-8"),
@@ -102,15 +102,21 @@ def test_detect_encoding(tmp_path):
             "name,origin\nGrizzly,USA\n".encode("utf-16-be"), "UTF-16BE",
         ),
     }
-    for fname, (data, want) in cases.items():
-        f = tmp_path / fname
-        f.write_bytes(data)
-        assert detect_encoding(f) == want, fname
+    for fname, (data, _) in cases.items():
+        (tmp_path / fname).write_bytes(data)
+    got = _probe_heads(spark, [tmp_path / f for f in cases], _encoding_of)
+    assert got == {str(tmp_path / f): want for f, (_, want) in cases.items()}
     # multi-byte char split across the sample boundary is still UTF-8
     big = ("x" * 9) + "é"
     f = tmp_path / "split.csv"
     f.write_bytes(big.encode("utf-8"))
-    assert detect_encoding(f, sample_size=10) == "UTF-8"
+    got = _probe_heads(
+        spark,
+        [f],
+        lambda head: _encoding_of(head, sample_size=10),
+        head_of=lambda _: f.read_bytes()[:10],
+    )
+    assert got == {str(f): "UTF-8"}
 
 
 def test_read_csv_auto_encoding_roundtrip(spark, tmp_path):

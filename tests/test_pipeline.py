@@ -777,7 +777,8 @@ def test_csv_no_multiline_probe_catches_quoted_newline(spark, tmp_path):
     import pytest
 
     from postgresimporter_spark.sources.csv import (
-        has_quoted_newline,
+        _probe_heads,
+        _quoted_newline_in_head,
         read_csv_all_text,
     )
 
@@ -785,13 +786,13 @@ def test_csv_no_multiline_probe_catches_quoted_newline(spark, tmp_path):
     dirty.write_text('name,notes\nGrizzly,"likes\nsalmon"\n')
     clean = tmp_path / "clean.csv"
     clean.write_text('name,notes\nGrizzly,"likes salmon, a lot"\n')
-
-    assert has_quoted_newline(dirty)
-    assert not has_quoted_newline(clean)
     # "" escape does not confuse the quote state machine
     escaped = tmp_path / "escaped.csv"
     escaped.write_text('name,notes\nGrizzly,"says ""grr"" often"\n')
-    assert not has_quoted_newline(escaped)
+
+    assert _probe_heads(
+        spark, [dirty, clean, escaped], _quoted_newline_in_head
+    ) == {str(dirty): True, str(clean): False, str(escaped): False}
 
     with pytest.raises(ValueError, match="quoted embedded newline"):
         read_csv_all_text(spark, dirty, multiline=False)
@@ -803,6 +804,128 @@ def test_csv_no_multiline_probe_catches_quoted_newline(spark, tmp_path):
     # the default (multiLine) path is untouched: dirty parses correctly
     got_ml = {tuple(r) for r in read_csv_all_text(spark, dirty).collect()}
     assert got_ml == {("Grizzly", "likes\nsalmon")}
+
+
+def test_views_take_columns_from_header(spark, tmp_path):
+    """Every view takes its columns from the driver's parse of its
+    file's header, named by Spark's own rule for CSV headers, so in both
+    multiline modes its columns and rows equal those of a Spark read
+    that infers the header; and building the views fires no Spark job
+    (counted by the newest job id, as in test_q55_is_single_lazy_plan)."""
+    from postgresimporter_spark.sources.csv import (
+        _encoding_of,
+        csv_dialect,
+        read_csv_all_text,
+    )
+
+    wide = [f"col{i}" for i in range(12000)]  # past the 64 KB head sample
+    cases = {
+        "dup_case": b"Id,ID\n1,2\n",
+        "dup": b"a,A,a,b\n1,2,3,4\n",
+        "empty_name": b"x,,y\n1,2,3\n",
+        "trailing_comma": b"a,b,\n1,2,3\n",
+        "bom": "\ufeffid,name\n1,a\n".encode("utf-8"),
+        "crlf_quoted": b'id,name\r\n1,"a\r\nb"\r\n2,c\r\n',
+        "utf16": "id,name\n1,a\n2,b\n".encode("utf-16"),
+        "latin1": "id,n\xe4me\n1,caf\xe9\n".encode("latin-1"),
+        "zero_byte": b"",
+        "header_only": b"id,name\n",
+        "blank_first": b"\r\nid,name\r\n2,b",
+        "space_first": b"  \nid,name\n2,b\n",
+        "wide_header": (
+            ",".join(wide) + "\n" + ",".join(["v"] * len(wide)) + "\n"
+        ).encode(),
+    }
+    for name, data in cases.items():
+        (tmp_path / f"{name}.csv").write_bytes(data)
+    idname = ["id", "name"]
+    expected = {
+        "dup_case": ["Id0", "ID1"],
+        "dup": ["a0", "A1", "a2", "b"],
+        "empty_name": ["x", "_c1", "y"],
+        "trailing_comma": ["a", "b", "_c2"],
+        "bom": idname,
+        "utf16": idname,
+        "latin1": ["id", "n\xe4me"],
+        "zero_byte": [],
+        "header_only": idname,
+        "blank_first": idname,
+        "wide_header": wide,
+    }
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job_id():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    def inferred(path, multiline):
+        enc = _encoding_of(path.read_bytes()[: 1 << 16])
+        reader = spark.read.option("header", "true")
+        return csv_dialect(reader, multiline, enc).csv(str(path))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for multiline in (True, False):
+        j0 = last_job_id()
+        views = {
+            name: read_csv_all_text(
+                spark, tmp_path / f"{name}.csv", multiline=multiline
+            )
+            for name in cases
+            if multiline or name != "crlf_quoted"
+        }
+        assert last_job_id() == j0, multiline
+        if not multiline:
+            with pytest.raises(ValueError, match="quoted embedded newline"):
+                read_csv_all_text(
+                    spark, tmp_path / "crlf_quoted.csv", multiline=False
+                )
+        want = {
+            **expected,
+            "space_first": ["  "] if multiline else idname,
+            **({"crlf_quoted": idname} if multiline else {}),
+        }
+        assert {n: v.columns for n, v in views.items()} == want, multiline
+        for name, view in views.items():
+            ref = inferred(tmp_path / f"{name}.csv", multiline)
+            assert view.columns == ref.columns, (name, multiline)
+            assert rows(view) == rows(ref), (name, multiline)
+
+    # duplicates compare case-sensitively when the session does
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        view = read_csv_all_text(spark, tmp_path / "dup_case.csv")
+        ref = inferred(tmp_path / "dup_case.csv", True)
+        assert view.columns == ref.columns == ["Id", "ID"]
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+
+
+def test_combine_member_with_leading_blank_line(spark, tmp_path):
+    """A member whose dump starts with a blank line has the header
+    Spark reads from it, so it combines with its group instead of
+    failing the header check with ``[] != ['id', 'name']``."""
+    from postgresimporter_spark.sources.csv import read_csv_group
+
+    for multiline in (True, False):
+        d = tmp_path / f"ml_{multiline}"
+        d.mkdir()
+        (d / "p_1.csv").write_bytes(b"id,name\n1,a\n")
+        (d / "p_2.csv").write_bytes(b"\r\nid,name\r\n2,b")
+        df = read_csv_group(spark, sorted(d.iterdir()), multiline=multiline)
+        assert df.columns == ["id", "name"]
+        assert sorted(tuple(r) for r in df.collect()) == [
+            ("1", "a"),
+            ("2", "b"),
+        ]
+    result = run_pipeline(
+        spark,
+        PipelineConfig(sources=[tmp_path / "ml_True"], combine_tables=True),
+    )
+    assert sorted(
+        tuple(r) for r in result.combined_views["import_p"].collect()
+    ) == [("1", "a"), ("2", "b")]
+    assert result.check_passed
 
 
 def test_combine_schema_drift_all_axes(spark, tmp_path):
@@ -1127,14 +1250,15 @@ def test_distributed_zip_extraction_corrupt_and_chunked(spark, tmp_path):
 
 
 def test_head_guards_work_via_hadoop_fs(spark, tmp_path):
-    """detect_encoding and has_quoted_newline keep working for paths
-    local IO cannot open (r11, same hole as the header check): file:/
-    URIs route through the Hadoop FileSystem bulk read. An unreadable
-    path degrades to the documented defaults (UTF-8 / False), never an
-    exception."""
+    """The encoding sniff and the quoted-newline probe keep working for
+    paths local IO cannot open (r11, same hole as the header check):
+    file:/ URIs route through the Hadoop FileSystem bulk read. An
+    unreadable path gives None (unprobed), never an exception; the
+    ingest then reads it as UTF-8 and warns that it is unprobed."""
     from postgresimporter_spark.sources.csv import (
-        detect_encoding,
-        has_quoted_newline,
+        _encoding_of,
+        _probe_heads,
+        _quoted_newline_in_head,
         read_csv_all_text,
     )
 
@@ -1145,13 +1269,21 @@ def test_head_guards_work_via_hadoop_fs(spark, tmp_path):
     lat = tmp_path / "latin.csv"
     lat.write_bytes("a,b\ncaf\xe9,2\n".encode("latin-1"))
 
-    assert has_quoted_newline(f"file:{dirty}", spark=spark) is True
-    assert has_quoted_newline(f"file:{clean}", spark=spark) is False
-    assert detect_encoding(f"file:{lat}", spark=spark) == "ISO-8859-1"
-    assert detect_encoding(f"file:{clean}", spark=spark) == "UTF-8"
-    # missing path: defaults, no exception
-    assert detect_encoding(f"file:{tmp_path}/nope.csv", spark=spark) == "UTF-8"
-    assert has_quoted_newline(f"file:{tmp_path}/nope.csv", spark=spark) is False
+    nope = f"file:{tmp_path}/nope.csv"
+    uris = [f"file:{dirty}", f"file:{clean}", nope]
+    assert _probe_heads(spark, uris, _quoted_newline_in_head) == {
+        f"file:{dirty}": True,
+        f"file:{clean}": False,
+        nope: None,
+    }
+    uris = [f"file:{lat}", f"file:{clean}", nope]
+    assert _probe_heads(spark, uris, _encoding_of) == {
+        f"file:{lat}": "ISO-8859-1",
+        f"file:{clean}": "UTF-8",
+        nope: None,
+    }
+    # missing path: read as Spark's default charset, no exception
+    assert _encoding_of(None) == "UTF-8"
 
     # the multiline=False self-guard now fires on URI paths end-to-end
     import pytest

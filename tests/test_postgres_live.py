@@ -394,6 +394,40 @@ def test_pipeline_combines_in_db_like_csv_union(spark, pg, tmp_path, monkeypatch
     ]
 
 
+def test_header_cells_are_quoted_identifiers(spark, pg, tmp_path):
+    """A header cell is one column name whatever it holds: a cell that
+    closes the identifier quote and appends a statement creates one
+    column of exactly that name and runs nothing, and a cell holding a
+    double quote round-trips as a column name. The combined table,
+    built in Postgres from its members, quotes the same way."""
+    evil = 'x" text); DROP TABLE "import"."victim"; --'
+    with _conn(pg) as c:
+        ensure_schema(c)
+        c.query('DROP TABLE IF EXISTS import."victim"')
+        c.query('CREATE TABLE import."victim" (v text)')
+        c.query("INSERT INTO import.\"victim\" VALUES ('kept')")
+    cell = '"' + evil.replace('"', '""') + '"'
+    data = _write_csvs(
+        tmp_path / "data",
+        {
+            "inject_1.csv": f"id,{cell}\n1,a\n",
+            "inject_2.csv": f"id,{cell}\n2,b\n",
+            "quoted.csv": 'id,"a""b"\n3,c\n',
+        },
+    )
+    result = run_pipeline(
+        spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
+    )
+    assert result.check_passed
+    assert {"import_inject", "import_quoted"} <= result.sink_written
+    for table in ("inject_1", "inject"):
+        assert _column_types(pg, table) == [("id", "text"), (evil, "text")]
+    assert _rows(pg, "inject") == [("1", "a"), ("2", "b")]
+    assert _column_types(pg, "quoted") == [("id", "text"), ('a"b', "text")]
+    assert _rows(pg, "quoted") == [("3", "c")]
+    assert _rows(pg, "victim") == [("kept",)]
+
+
 def test_pipeline_large_group_combines_through_copy(
     spark, pg, tmp_path, monkeypatch
 ):
