@@ -16,9 +16,11 @@ row-level Catalyst variant is provided for distributed path handling.
 
 from __future__ import annotations
 
+import os
 import re
 import unicodedata
 from pathlib import Path, PurePath
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -59,6 +61,21 @@ def import_view_name(table: str) -> str:
     return f"import_{table}"
 
 
+def uri_path_keys(uri: str) -> tuple[str, str]:
+    """The lexical absolute path and the real path of the file that a
+    ``F.input_file_name()`` URI names, the two keys under which a
+    driver-side path is matched to Spark's per-row file identity.
+
+    The URI's path is %XX-encoded: it is unquoted, NOT form-decoded
+    (``+`` must stay ``+``), so it equals the driver-side path exactly.
+    Hadoop's qualification does not resolve symlinks, so the lexical
+    path matches a driver path taken through the same symlinked
+    component, and the real path matches one taken around it."""
+    p = urlparse(uri)
+    path = unquote(p.path) if p.scheme else unquote(uri)
+    return os.path.abspath(path), os.path.realpath(path)
+
+
 def to_filename_col(col: Column) -> Column:
     """Row-level Catalyst equivalent of :func:`to_filename`.
 
@@ -89,6 +106,7 @@ __all__ = [
     "table_name_for_path",
     "file_table_name",
     "import_view_name",
+    "uri_path_keys",
     "to_filename_col",
     "table_name_for_path_col",
 ]

@@ -319,27 +319,39 @@ class Loader:
     def write_sink(self, result: LoadResult) -> None:
         """Materialize import views to the configured sink.
 
-        Both sinks share one scheduler and differ only in two steps:
-        how one view is written, and how a combined table is built
-        from member tables this run already wrote.
+        Both sinks share one scheduler and differ in how one view is
+        written, how a combined table is built from member tables this
+        run already wrote, and whether a group's members can be
+        written together.
 
         - Postgres: every table is written through the COPY wire
           protocol (pgfutter-class throughput, no driver jar needed).
-          A combined table is built inside Postgres from its members
-          with ``CREATE TABLE ... AS SELECT * FROM m1 UNION ALL ...``
-          — the reference's own combine (main.py:215-248) — instead of
+          The member tables of a checked prefix group are written by
+          ONE ``copy_write`` over the group's combined view, each row
+          routed to the table of the file it came from: one scan and
+          one Spark job per group instead of one per file. A combined
+          table is built inside Postgres from its members with
+          ``CREATE TABLE ... AS SELECT * FROM m1 UNION ALL ...`` — the
+          reference's own combine (main.py:215-248) — instead of
           parsing and encoding the same CSV rows twice.
         - Parquet: a combined table is written from its members'
-          parquet files (columnar decode instead of a second CSV parse;
-          measured -38% on the sf1 ingest spine).
+          parquet files (columnar decode instead of a second CSV
+          parse; measured -38% on the sf1 ingest spine).
 
-        Writes run concurrently from driver threads, because a per-file
-        view is a single-split CSV scan and serial writes would leave
-        the cluster one task busy per job (the reference likewise ran
-        one pgfutter process per file). Per-file views are submitted
-        first. Each combined view waits only for its own members'
-        futures, so one slow file never stalls an unrelated group.
-        File tasks never wait on anything, so the pool cannot deadlock.
+        A group is written together when its combined view exists (so
+        every member header was checked), every member has a view and
+        no two members share a stem; its member futures all resolve to
+        the group write. If that write fails for any reason, each
+        member is written on its own, so one bad file fails only its
+        own table. Every other view (combine off, a failed or skipped
+        combine, a same-stem group, the parquet sink) is written from
+        its own per-file scan (the reference ran one pgfutter process
+        per file). Writes run concurrently from driver threads. Group
+        and per-file writes are submitted first and wait only on a
+        failed group's fallback writes, which run on a pool of their
+        own and wait on nothing, so the pools cannot deadlock. Each
+        combined view waits only for its own members' futures, so one
+        slow file never stalls an unrelated group.
 
         Every view takes its columns from its file's header
         (``read_csv_all_text``), and ``read_csv_group`` has verified
@@ -357,13 +369,37 @@ class Loader:
         aborts the whole run on one table)."""
         cfg = self.config
         if cfg.db is not None:
-            write_view, combine = self._postgres_steps()
+            write_view, combine, write_group = self._postgres_steps()
         elif cfg.sink_dir is not None:
-            write_view, combine = self._parquet_steps()
+            write_view, combine, write_group = self._parquet_steps()
         else:
             return
 
         from concurrent.futures import ThreadPoolExecutor
+
+        members = {
+            view: {
+                str(f): import_view_name(file_table_name(f))
+                for f in result.table_csv_files.get(
+                    view.removeprefix("import_"), []
+                )
+            }
+            for view in result.combined_views
+        }
+        # two files with one stem (in different directories) share one
+        # member table, which holds only one of them
+        distinct = {
+            view: len(set(ms.values())) == len(ms)
+            for view, ms in members.items()
+        }
+        groups = {
+            view: ms
+            for view, ms in members.items()
+            if write_group is not None
+            and ms
+            and distinct[view]
+            and all(m in result.file_views for m in ms.values())
+        }
 
         def _write_one(view: str, df: DataFrame) -> None:
             try:
@@ -373,25 +409,37 @@ class Loader:
                 return
             result.sink_written.add(view)
 
+        def _write_group(view: str, routes: dict[str, str]) -> None:
+            try:
+                write_group(result.combined_views[view], routes)
+            except Exception:  # noqa: BLE001 - each member on its own
+                log.exception(
+                    "group write failed for %s; writing each member on "
+                    "its own",
+                    view,
+                )
+                list(
+                    fallback.map(
+                        lambda m: _write_one(m, result.file_views[m]),
+                        routes.values(),
+                    )
+                )
+                return
+            result.sink_written.update(routes.values())
+
         def _write_combined(view: str, csv_df: DataFrame) -> None:
-            table = view.removeprefix("import_")
-            members = [
-                import_view_name(file_table_name(f))
-                for f in result.table_csv_files.get(table, [])
-            ]
-            for m in members:
+            ms = list(members[view].values())
+            for m in ms:
                 fut = file_futures.get(m)
                 if fut is not None:
                     fut.result()
             if (
-                members
-                # two files with one stem (in different directories)
-                # share one member table, which holds only one of them
-                and len(set(members)) == len(members)
-                and all(m in result.sink_written for m in members)
+                ms
+                and distinct[view]
+                and all(m in result.sink_written for m in ms)
             ):
                 try:
-                    combine(view, members, csv_df)
+                    combine(view, ms, csv_df)
                     result.sink_written.add(view)
                     return
                 except Exception:  # noqa: BLE001 - fall back below
@@ -402,11 +450,17 @@ class Loader:
                     )
             _write_one(view, csv_df)
 
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            file_futures = {
-                view: pool.submit(_write_one, view, df)
-                for view, df in result.file_views.items()
-            }
+        with (
+            ThreadPoolExecutor(max_workers=16) as pool,
+            ThreadPoolExecutor(max_workers=16) as fallback,
+        ):
+            file_futures = {}
+            for view, routes in groups.items():
+                fut = pool.submit(_write_group, view, routes)
+                file_futures.update(dict.fromkeys(routes.values(), fut))
+            for view, df in result.file_views.items():
+                if view not in file_futures:
+                    file_futures[view] = pool.submit(_write_one, view, df)
             combined_futures = [
                 pool.submit(_write_combined, view, df)
                 for view, df in result.combined_views.items()
@@ -415,7 +469,8 @@ class Loader:
                 fut.result()
 
     def _postgres_steps(self):
-        """(write one view, combine from members) for the Postgres sink."""
+        """(write one view, combine from members, write a group's
+        member tables from one scan) for the Postgres sink."""
         db = self.config.db
         from .sources import copy_sink
         from .sources.pgwire import connect
@@ -447,10 +502,18 @@ class Loader:
                 [m.removeprefix("import_") for m in members],
             )
 
-        return write_copy, combine_in_db
+        def write_members(csv_df: DataFrame, routes: dict[str, str]) -> None:
+            copy_sink.copy_write(
+                csv_df,
+                db,
+                {f: m.removeprefix("import_") for f, m in routes.items()},
+            )
+
+        return write_copy, combine_in_db, write_members
 
     def _parquet_steps(self):
-        """(write one view, combine from members) for the parquet sink."""
+        """(write one view, combine from members, no group write) for
+        the parquet sink."""
         cfg = self.config
 
         def write_parquet(view: str, df: DataFrame) -> None:
@@ -484,7 +547,7 @@ class Loader:
                 view, self.spark.read.parquet(*paths).select(*csv_df.columns)
             )
 
-        return write_parquet, combine_from_parquet
+        return write_parquet, combine_from_parquet, None
 
 
 def run_pipeline(

@@ -21,31 +21,21 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
-from .naming import import_view_name
+from .naming import import_view_name, uri_path_keys
 
 log = logging.getLogger(__name__)
 
 
 def uri_count_map(pairs) -> dict[str, int]:
     """(input_file_name URI, count) pairs -> {path: count} keyed under
-    both the lexical absolute path (Hadoop's qualification does NOT
-    resolve symlinks) and the real path (in case one side went through
-    a symlinked component), so driver-side lookups can't silently miss
-    and report 0. input_file_name is a %XX-encoded URI; unquote (NOT
-    form-decoding: '+' must stay '+') the path part so it matches the
-    driver-side Path exactly."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    def _norm(uri: str) -> str:
-        p = urlparse(uri)
-        return unquote(p.path) if p.scheme else unquote(uri)
-
+    both paths :func:`naming.uri_path_keys` gives (the lexical absolute
+    path and the real path), so driver-side lookups can't silently miss
+    and report 0."""
     per_file: dict[str, int] = {}
     for uri, n in pairs:
-        path = _norm(uri)
-        per_file[os.path.abspath(path)] = n
-        per_file.setdefault(os.path.realpath(path), n)
+        lexical, real = uri_path_keys(uri)
+        per_file[lexical] = n
+        per_file.setdefault(real, n)
     return per_file
 
 

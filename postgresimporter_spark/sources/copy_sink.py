@@ -11,26 +11,33 @@ its rows through ``COPY ... FROM STDIN (FORMAT csv)``.
 Scale posture: the write is embarrassingly parallel and introduces no
 shuffle; each non-empty partition opens one backend connection, so a
 very wide frame should be coalesced by its caller to bound connection
-fan-in. Each partition's COPY is a single implicit transaction,
-so a failed task leaves nothing behind and Spark's task retry is safe;
-with speculative execution enabled, use ``mode="append"`` into a
-staging table instead.
+fan-in. Each task writes in ONE transaction (``BEGIN``, one ``COPY``
+per contiguous run of rows from one input file, ``COMMIT``), which may
+cover several files when a routed write packs them into one task: a
+failed task commits nothing, so Spark's task retry is safe; with
+speculative execution enabled, use ``mode="append"`` into a staging
+table instead.
 
-The pipeline (``Loader.write_sink``) writes its tables concurrently,
-one ``copy_write`` per per-file view from a driver thread pool. It
-creates the target schema once with ``ensure_schema`` before that
-fan-out; ``ensure_schema`` also tolerates concurrent callers, so
-standalone concurrent ``copy_write`` calls into a fresh database work
-too. A prefix-combined table whose members all landed in the same run
-is built inside Postgres by ``combine_tables`` (``CREATE TABLE ... AS
-SELECT * FROM m1 UNION ALL ...``, the reference's own combine,
-main.py:215-248) instead of COPYing the same rows a second time. Every
-view takes its columns from its file's header, and every member header
-was checked equal to the first before the combined view existed, at
-any group size, so the positional union lines up by construction. The
-pipeline falls back to ``copy_write`` from the CSV-backed combined view
-when a member is missing, stale or failed, when two member files share
-one stem, or when the server-side combine fails.
+The pipeline (``Loader.write_sink``) writes its tables concurrently
+from a driver thread pool. Every member table of a checked prefix
+group is written by ONE ``copy_write`` over the group's combined view
+(one scan, one Spark job), with a ``{file path: table}`` mapping that
+routes each row to its file's table; a failed group write falls back
+to one ``copy_write`` per member view, so one bad file fails only its
+own table. The pipeline creates the target schema once with
+``ensure_schema`` before that fan-out; ``ensure_schema`` also tolerates
+concurrent callers, so standalone concurrent ``copy_write`` calls into
+a fresh database work too. A prefix-combined table whose members all
+landed in the same run is built inside Postgres by ``combine_tables``
+(``CREATE TABLE ... AS SELECT * FROM m1 UNION ALL ...``, the
+reference's own combine, main.py:215-248) instead of COPYing the same
+rows a second time. Every view takes its columns from its file's
+header, and every member header was checked equal to the first before
+the combined view existed, at any group size, so the positional union
+lines up by construction. The pipeline falls back to ``copy_write``
+from the CSV-backed combined view when a member is missing, stale or
+failed, when two member files share one stem, or when the server-side
+combine fails.
 
 Reference semantics parity: pgfutter creates all-text columns in the
 ``import`` schema from the CSV header (reference README.md:51-53);
@@ -44,11 +51,16 @@ from __future__ import annotations
 
 import datetime as _dt
 import io
-from collections.abc import Iterable, Iterator
+import os
+from collections.abc import Iterable, Iterator, Mapping
+from itertools import chain, groupby
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as Tp
 
+from ..naming import uri_path_keys
 from .jdbc import DbOptions
 from .pgwire import PgConnection, PgError, connect
 
@@ -167,55 +179,87 @@ def combine_tables(
 def copy_write(
     df: DataFrame,
     db: DbOptions,
-    table: str,
+    table: str | Mapping[str, str],
     mode: str = "overwrite",
     schema: str = "import",
 ) -> None:
-    """Stream a DataFrame into ``<schema>.<table>`` via COPY, one
-    connection per partition.
+    """Stream a DataFrame into Postgres via COPY, one connection and one
+    transaction per partition.
 
-    ``mode``: ``overwrite`` drops + recreates the table from the
-    DataFrame schema; ``append`` requires it to exist. DDL runs on the
-    driver over one connection; data flows executor-side.
+    ``table`` is one table name, or a ``{file path: table}`` mapping:
+    each row then goes to the table of the CSV file it was read from
+    (``F.input_file_name()``, matched to the mapping's paths through
+    :func:`naming.uri_path_keys`), so one scan writes every member table
+    of a prefix group. A row whose file is not in the mapping fails its
+    task; it is never dropped. One name is the case where every row
+    goes to one table.
+
+    ``mode``: ``overwrite`` drops + recreates every target table from
+    the DataFrame schema, in one Query on the driver before the job;
+    ``append`` requires them to exist. Each task opens one connection
+    and runs one ``COPY`` per contiguous run of rows from one file
+    inside ``BEGIN … COMMIT``, so a failed task commits nothing and a
+    Spark retry is safe.
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append: {mode}")
+    n_cols = len(df.columns)
+    if isinstance(table, str):
+        tables, routes = [table], {}
+        rows_df, file_of = df, (lambda row: None)
+    else:
+        tables = sorted(set(table.values()))
+        routes = {os.path.abspath(p): t for p, t in table.items()}
+        for p, t in table.items():
+            routes.setdefault(os.path.realpath(p), t)
+        # the file URI rides after the data columns; the encoder reads
+        # the first n_cols fields by position, so it never writes it
+        rows_df = df.select("*", F.input_file_name())
+        file_of = itemgetter(n_cols)
     with connect(db) as conn:
         ensure_schema(conn, schema)
         if mode == "overwrite":
             conn.query(
-                f"DROP TABLE IF EXISTS {qualified(table, schema)};"
-                + create_table_ddl(df, table, schema)
+                "; ".join(
+                    f"DROP TABLE IF EXISTS {qualified(t, schema)}; "
+                    + create_table_ddl(df, t, schema)
+                    for t in tables
+                )
             )
 
-    n_cols = len(df.columns)
-    target = qualified(table, schema)
     host = db.host or "localhost"
     port = db.port or 5432
     database = db.database or "postgres"
     user = db.user or "postgres"
     password = db.password
 
+    def _target(uri: str | None) -> str:
+        if uri is None:
+            return qualified(table, schema)
+        lexical, real = uri_path_keys(uri)
+        t = routes.get(lexical) or routes.get(real)
+        if t is None:
+            raise KeyError(f"no target table for input file {uri!r}")
+        return qualified(t, schema)
+
     def _write_partition(rows):
-        chunks = rows_to_copy_csv(rows, n_cols)
-        first = next(chunks, None)
+        runs = groupby(rows, file_of)
+        first = next(runs, None)
         if first is None:  # empty partition: don't open a connection
             return
         with PgConnection(
             host=host, port=port, database=database,
             user=user, password=password,
         ) as pc:
-            pc.copy_in(
-                f"COPY {target} FROM STDIN (FORMAT csv, NULL '')",
-                _chain_first(first, chunks),
-            )
+            pc.query("BEGIN")
+            for uri, run in chain([first], runs):
+                pc.copy_in(
+                    f"COPY {_target(uri)} FROM STDIN (FORMAT csv, NULL '')",
+                    rows_to_copy_csv(run, n_cols),
+                )
+            pc.query("COMMIT")
 
-    df.foreachPartition(_write_partition)
-
-
-def _chain_first(first: bytes, rest: Iterator[bytes]) -> Iterator[bytes]:
-    yield first
-    yield from rest
+    rows_df.foreachPartition(_write_partition)
 
 
 def table_counts(

@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 
+from urllib.parse import quote
+
 import pytest
 
 from postgresimporter_spark.naming import (
     file_table_name,
     table_name_for_path,
     to_filename,
+    uri_path_keys,
 )
 
 GOLDENS = [
@@ -55,3 +58,20 @@ def test_row_level_variant_matches_python(spark):
         for r in df.select(table_name_for_path_col(F.col("path"))).collect()
     ]
     assert got == [table_name_for_path(p) for p in paths]
+
+
+def test_uri_path_keys_unquotes_without_form_decoding(tmp_path):
+    """An ``input_file_name`` URI names its file by the lexical and the
+    real path: %XX sequences decode once, ``+`` stays ``+``, and a
+    symlinked directory gives both the link path and the target path."""
+    real = tmp_path / "real"
+    real.mkdir()
+    link = tmp_path / "link"
+    link.symlink_to(real, target_is_directory=True)
+    name = "a b+c%41\u00e9.csv"
+    # as Hadoop encodes it: '+' is legal in a URI path and stays as is
+    uri = "file://" + quote(str(link / name), safe="/+")
+    assert uri_path_keys(uri) == (str(link / name), str(real.resolve() / name))
+    # a URI without a scheme is its encoded path alone
+    bare = quote(str(real / name), safe="/+")
+    assert uri_path_keys(bare) == (str(real / name),) * 2

@@ -12,11 +12,14 @@ su, permissions) -> the whole module skips.
 
 from __future__ import annotations
 
+import csv
 import datetime as dt
+import io
 import os
 import shutil
 import subprocess
 import time
+from contextlib import contextmanager
 from decimal import Decimal
 from pathlib import Path
 
@@ -30,6 +33,7 @@ from postgresimporter_spark.sources.copy_sink import (
     ensure_schema,
     table_counts,
 )
+from postgresimporter_spark.sources.csv import read_csv_group
 from postgresimporter_spark.sources.jdbc import DbOptions
 from postgresimporter_spark.sources.pgwire import PgConnection, PgError
 
@@ -288,15 +292,23 @@ def _write_csvs(d: Path, files: dict[str, str]) -> Path:
 
 def _spy(monkeypatch, fail: dict | None = None) -> dict[str, list]:
     """Record the tables the pipeline COPYs and combines in Postgres.
-    ``fail`` maps a table name to a function that replaces its
-    ``copy_write`` call (to inject a failure)."""
-    calls: dict[str, list] = {"copy": [], "combine": []}
+    A routed ``copy_write`` (a ``{file: table}`` mapping) records each
+    of its tables under ``copy`` and their list under ``routed``.
+    ``fail`` maps a table name to a function that replaces the
+    ``copy_write`` call writing it (to inject a failure): a routed call
+    that writes any such table fails the same way, so the per-member
+    fallback then meets the injected failure again."""
+    calls: dict[str, list] = {"copy": [], "combine": [], "routed": []}
     real_copy, real_combine = copy_sink.copy_write, copy_sink.combine_tables
 
     def copy_spy(df, db, table, *a, **k):
-        calls["copy"].append(table)
-        if fail and table in fail:
-            return fail[table](real_copy, df, db, table)
+        tables = [table] if isinstance(table, str) else sorted(table.values())
+        calls["copy"].extend(tables)
+        if not isinstance(table, str):
+            calls["routed"].append(tables)
+        for t in tables:
+            if fail and t in fail:
+                return fail[t](real_copy, df, db, table)
         return real_copy(df, db, table, *a, **k)
 
     def combine_spy(db, table, members, *a, **k):
@@ -523,7 +535,9 @@ def test_pipeline_failed_member_write_falls_back_to_copy(
     result = run_pipeline(
         spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
     )
-    assert calls["copy"].count("crabs_1") == 1
+    # once in the failed group write, once on its own in the fallback
+    assert calls["routed"] == [["crabs_1", "crabs_2"]]
+    assert calls["copy"].count("crabs_1") == 2
     assert "import_crabs_1" not in result.sink_written
     assert table_counts(pg, ["crabs_1"]) == {"crabs_1": 0}
     assert calls["combine"] == []
@@ -549,10 +563,163 @@ def test_pipeline_same_stem_members_combine_through_copy(
         spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
     )
     assert calls["combine"] == []
+    # no routed group write: the shared member view is written from its
+    # own scan, then the combined table from the CSV-backed view
+    assert calls["routed"] == []
+    assert calls["copy"] == ["eels_1", "eels"]
     assert "import_eels" in result.sink_written
     assert _rows(pg, "eels") == [
         ("Conger",), ("Electric",), ("Glass",), ("Moray",),
     ]
+
+
+@contextmanager
+def _spark_conf(spark, conf: dict[str, str]):
+    """Set session confs for the block, restoring the previous values."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _csv_rows(text: str) -> list[tuple]:
+    return sorted(
+        (tuple(r) for r in list(csv.reader(io.StringIO(text)))[1:]), key=repr
+    )
+
+
+def test_routed_task_commits_nothing_when_a_later_copy_fails(
+    spark, pg, tmp_path, monkeypatch
+):
+    """A task that writes several files of a group runs their COPYs in
+    one transaction: when the second file's COPY fails (a NUL byte,
+    which Postgres text rejects), none of the first file's rows are
+    committed. In the pipeline the failed group write then falls back to
+    one write per member: the bad member fails alone, and every healthy
+    member holds exactly its CSV rows, with none left twice by the
+    failed group write."""
+    gulls = {
+        "gulls_1.csv": "name,n\n" + "".join(f"gull{i},{i}\n" for i in range(40)),
+        "gulls_2.csv": "name,n\nbad\x00,1\n",
+        "gulls_3.csv": "name,n\nSkua,1\nTern,2\n",
+    }
+    terns = {"terns_1.csv": "name\nArctic\n", "terns_2.csv": "name\nSooty\n"}
+    data = _write_csvs(tmp_path / "data", {**gulls, **terns})
+    first, second = data / "gulls_1.csv", data / "gulls_2.csv"
+    # one task for the scan: small files are packed largest first
+    with _spark_conf(spark, {"spark.sql.files.minPartitionNum": "1"}):
+        view = read_csv_group(spark, [first, second])
+        assert view.rdd.getNumPartitions() == 1
+        with pytest.raises(Exception, match="0x00"):
+            copy_write(
+                view, pg, {str(first): "gulls_1", str(second): "gulls_2"}
+            )
+    # the driver created both tables; the task committed no row
+    assert table_counts(pg, ["gulls_1", "gulls_2"]) == {
+        "gulls_1": 0, "gulls_2": 0,
+    }
+
+    calls = _spy(monkeypatch)
+    result = run_pipeline(
+        spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
+    )
+    assert sorted(calls["routed"]) == [
+        ["gulls_1", "gulls_2", "gulls_3"], ["terns_1", "terns_2"],
+    ]
+    assert "import_gulls_2" not in result.sink_written
+    assert {"import_gulls_1", "import_gulls_3"} <= result.sink_written
+    for name in ("gulls_1.csv", "gulls_3.csv"):
+        table, want = name.removesuffix(".csv"), _csv_rows(gulls[name])
+        assert _rows(pg, table) == want
+        difference = abs(table_counts(pg, [table])[table] - len(want))
+        assert difference == 0
+    report = {r.table: r for r in result.report.collect()}
+    assert report["terns"].difference == 0
+    assert _rows(pg, "terns") == [("Arctic",), ("Sooty",)]
+
+
+def test_routed_write_matches_odd_file_names(
+    spark, pg, tmp_path, monkeypatch
+):
+    """``input_file_name`` gives a %-encoded URI. File names with a
+    space, ``%``, ``+``, a literal ``%41`` and a non-ASCII character
+    still route each row to its own file's table, in one group write."""
+    names = {
+        "odd_a b.csv": "odd_a_b",
+        "odd_50%.csv": "odd_50",
+        "odd_c+d.csv": "odd_cd",
+        "odd_%41.csv": "odd_41",
+        "odd_\u00e9.csv": "odd_e",
+    }
+    files = {n: f"name,src\n{t}_x,{n}\n{t}_y,{n}\n" for n, t in names.items()}
+    data = _write_csvs(tmp_path / "data", files)
+    calls = _spy(monkeypatch)
+    result = run_pipeline(
+        spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
+    )
+    assert calls["routed"] == [sorted(names.values())]
+    assert sorted(calls["copy"]) == sorted(names.values())
+    assert calls["combine"] == ["odd"]
+    for n, t in names.items():
+        assert _rows(pg, t) == _csv_rows(files[n])
+    assert len(_rows(pg, "odd")) == 2 * len(names)
+    assert result.check_passed
+
+
+def test_routed_write_mixed_encoding_group(spark, pg, tmp_path, monkeypatch):
+    """A group that mixes encodings is a union of one scan per encoding;
+    its routed write still sends each row to its own file's table."""
+    data = _write_csvs(
+        tmp_path / "data", {"pets_1.csv": "name,notes\nRex,dog\nTom,cat\n"}
+    )
+    (data / "pets_2.csv").write_bytes(
+        'name,notes\nPolly,"talks\na lot"\nNemo,fish\n'.encode("utf-16")
+    )
+    calls = _spy(monkeypatch)
+    result = run_pipeline(
+        spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
+    )
+    assert calls["routed"] == [["pets_1", "pets_2"]]
+    assert calls["combine"] == ["pets"]
+    assert _rows(pg, "pets_1") == [("Rex", "dog"), ("Tom", "cat")]
+    assert _rows(pg, "pets_2") == [("Nemo", "fish"), ("Polly", "talks\na lot")]
+    assert result.check_passed
+
+
+def test_routed_write_split_member_lands_once(
+    spark, pg, tmp_path, monkeypatch
+):
+    """With ``csv_multiline=False`` a member file splits across several
+    partitions, so several tasks COPY rows of one file into one table:
+    every row lands exactly once."""
+    n = 3000
+    big = "id,v\n" + "".join(f"{i},value{i}\n" for i in range(n))
+    data = _write_csvs(
+        tmp_path / "data", {"ferns_1.csv": big, "ferns_2.csv": "id,v\nx,y\n"}
+    )
+    calls = _spy(monkeypatch)
+    with _spark_conf(spark, {"spark.sql.files.maxPartitionBytes": "8192"}):
+        result = run_pipeline(
+            spark,
+            PipelineConfig(
+                sources=[data], combine_tables=True, db=pg,
+                csv_multiline=False,
+            ),
+        )
+        assert result.combined_views["import_ferns"].rdd.getNumPartitions() > 3
+    assert calls["routed"] == [["ferns_1", "ferns_2"]]
+    assert _rows(pg, "ferns_1") == _csv_rows(big)
+    assert table_counts(pg, ["ferns_1", "ferns_2", "ferns"]) == {
+        "ferns_1": n, "ferns_2": 1, "ferns": n + 1,
+    }
+    assert result.check_passed
 
 
 def test_pipeline_failed_table_does_not_stop_others(
