@@ -4,8 +4,10 @@ Stages (reference order preserved):
 
   0. pre-load SQL hooks
   1. unzip archives (idempotent skip unless ``--all``)
-  2. discover CSVs -> exclude-regex -> per-file import views -> install
-     function library -> optional prefix combine
+  2. discover CSVs -> exclude-regex -> per-file header checks ->
+     (Postgres sink: one routed write of every per-file table starts)
+     -> per-file import views -> install function library -> optional
+     prefix combine -> sink
   3. post-load SQL hooks
   4. CSV row counting
   5. count reconciliation report (FATAL log if sum of diffs > tolerance)
@@ -20,6 +22,7 @@ from __future__ import annotations
 
 import logging
 import re
+from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -32,7 +35,8 @@ from .discovery import discover_csvs, discover_zips
 from .functions import register_all
 from .naming import file_table_name, import_view_name
 from .reconcile import reconciliation_report
-from .sources.csv import read_csv_all_text, read_csv_group
+from .sources.csv import checked_schema, read_csv_all_text
+from .sources.csv import read_csv_group, read_csv_routed
 
 log = logging.getLogger(__name__)
 
@@ -167,6 +171,15 @@ def run_sql_hooks_db(db, scripts: list[Path]) -> None:
     _run_hook_scripts(scripts, session, "sink hook")
 
 
+def _background(fn, *args) -> Future:
+    """``fn(*args)`` on a driver thread of its own."""
+    pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix=fn.__name__)
+    try:
+        return pool.submit(fn, *args)
+    finally:
+        pool.shutdown(wait=False)
+
+
 class Loader:
     """Spark-native counterpart of reference ``Loader`` (main.py:28-404)."""
 
@@ -175,6 +188,11 @@ class Loader:
         self.config = config
 
     def load(self) -> LoadResult:
+        """The stages in the reference's order (module docstring). The
+        CSV row count and (Postgres sink) the routed write of every
+        checked file's table (:meth:`_write_files`) run on driver
+        threads while this one builds the views and installs the
+        functions; the write is waited for even if those steps raise."""
         cfg = self.config
         result = LoadResult()
 
@@ -196,64 +214,83 @@ class Loader:
         d = discover_csvs(cfg.sources, cfg.exclude_regex)
         result.table_csv_files = d.table_csv_files
 
-        # Kick the reconciliation's CSV row count off NOW on a driver
-        # thread (r14, guide §2.6 "overlap independent jobs"): the
-        # count reads the raw dump files and depends on nothing the
-        # import/sink steps produce, while the sink writes' task tails
-        # leave executors idle that this one distributed job
-        # back-fills. Joined at the reconciliation step below — the
-        # report is byte-identical, only the wall clock overlaps. The
-        # DB-side count is NOT overlapped: it reads the materialized
-        # sink, which exists only after write_sink.
+        # The reconciliation's CSV row count reads only the raw dump
+        # files, so it starts NOW on a driver thread and back-fills the
+        # executors the other steps leave idle; it is joined at the
+        # report. It parses as the load does (csv_multiline included).
+        # The DB-side count reads the sink, so it waits for write_sink.
         csv_counts_async = None
         if not cfg.disable_check and result.table_csv_files:
-            from concurrent.futures import ThreadPoolExecutor
-
             # looked up at call time: benchmark/tracing.py rebinds it
             from .reconcile import csv_row_counts
 
-            pool = ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="csv-count"
-            )
-            # the count parses as the load does, so it splits the same
-            # way: multiline=False stays splittable within files
-            csv_counts_async = pool.submit(
+            csv_counts_async = _background(
                 csv_row_counts,
                 self.spark,
                 result.table_csv_files,
                 cfg.csv_multiline,
             )
-            pool.shutdown(wait=False)
 
         # Step 2: import (main.py:334-335 -> 171-213); --all overrides.
         # Only the per-file LOAD is gated — function installation and
         # combine run unconditionally in the reference (main.py:195-213:
         # the disable gate wraps import_data alone).
-        if not cfg.disable_import or cfg.process_all:
+        importing = not cfg.disable_import or cfg.process_all
+        # Each file's header is checked ONCE (driver-side, no Spark
+        # job); the routed write and the views both follow this
+        # {view: (file, schema)}: a later readable file of one stem wins.
+        heads: dict[str, bytes | None] = {}
+        checked = {}
+        if importing:
             for f in d.dump_files:
                 try:
-                    df = read_csv_all_text(
-                        self.spark, f, multiline=cfg.csv_multiline
+                    schema = checked_schema(
+                        self.spark, [f], cfg.csv_multiline, heads
                     )
-                    view = import_view_name(file_table_name(f))
+                except Exception:  # noqa: BLE001
+                    log.exception("import failed: %s", f)
+                    continue
+                checked[import_view_name(file_table_name(f))] = (f, schema)
+
+        files_written = None
+        if cfg.db is not None and checked:
+            routes = {
+                str(f): (file_table_name(f), schema.names)
+                for f, schema in checked.values()
+            }
+            files_written = _background(self._write_files, routes, heads)
+        try:
+            for view, (f, schema) in checked.items():
+                try:
+                    df = read_csv_all_text(
+                        self.spark, f, cfg.csv_multiline, heads, schema
+                    )
                     df.createOrReplaceTempView(view)
                     result.file_views[view] = df
                 except Exception:  # noqa: BLE001
                     log.exception("import failed: %s", f)
 
-        # install packaged function library (main.py:202-208)
-        register_all(self.spark)
+            # install packaged function library (main.py:202-208)
+            register_all(self.spark)
 
-        # combine (main.py:210-248)
-        if cfg.combine_tables:
-            self._combine(d.table_csv_files, result)
+            # combine (main.py:210-248)
+            if cfg.combine_tables:
+                self._combine(d.table_csv_files, result, heads)
+        finally:
+            # a load that fails here still waits for the write it began
+            written: set[str] = set()
+            if files_written is not None:
+                try:
+                    written = files_written.result()
+                except Exception:  # noqa: BLE001 - each file on its own
+                    log.exception("routed per-file write failed")
 
         # Step 2.5: materialize to the sink BEFORE post-hooks/check —
         # the reference loads into Postgres during import (pgfutter,
         # main.py:491-542), so its post-load hooks and reconciliation
         # see the data in the DB.
         if cfg.db is not None or cfg.sink_dir is not None:
-            self.write_sink(result)
+            self.write_sink(result, written)
 
         # Step 3: post-load hooks (main.py:337-356)
         self._run_hooks(cfg.post_load)
@@ -290,7 +327,7 @@ class Loader:
             run_sql_hooks(self.spark, scripts)
 
     def _combine(
-        self, groups: dict[str, list[Path]], result: LoadResult
+        self, groups: dict[str, list[Path]], result: LoadResult, heads=None
     ) -> None:
         """Prefix combine (O1). Skips groups whose combined name collides
         with a member file's table name (reference main.py:222-226);
@@ -308,7 +345,10 @@ class Loader:
                 continue
             try:
                 df = read_csv_group(
-                    self.spark, files, multiline=self.config.csv_multiline
+                    self.spark,
+                    files,
+                    multiline=self.config.csv_multiline,
+                    _heads=heads,
                 )
                 view = import_view_name(table)
                 df.createOrReplaceTempView(view)
@@ -316,90 +356,39 @@ class Loader:
             except Exception:  # noqa: BLE001
                 log.exception("combine failed for table %s", table)
 
-    def write_sink(self, result: LoadResult) -> None:
+    def write_sink(
+        self, result: LoadResult, written: set[str] = frozenset()
+    ) -> None:
         """Materialize import views to the configured sink.
 
-        Both sinks share one scheduler and differ in how one view is
-        written, how a combined table is built from member tables this
-        run already wrote, and whether a group's members can be
-        written together.
+        Per-file tables: ``load`` passes ``written``, the views whose
+        tables the ONE routed ``copy_write`` of the import
+        (:meth:`_write_files`, started after the header checks) wrote.
+        Every other view (all of them if it failed, or without it, as
+        on the parquet sink) is written from its own per-file scan, as
+        the reference ran one pgfutter process per file, so one bad
+        file fails only its own table.
 
-        - Postgres: every table is written through the COPY wire
-          protocol (pgfutter-class throughput, no driver jar needed).
-          The member tables of a checked prefix group are written by
-          ONE ``copy_write`` over the group's combined view, each row
-          routed to the table of the file it came from: one scan and
-          one Spark job per group instead of one per file. A combined
-          table is built inside Postgres from its members with
-          ``CREATE TABLE ... AS SELECT * FROM m1 UNION ALL ...`` — the
-          reference's own combine (main.py:215-248) — instead of
-          parsing and encoding the same CSV rows twice.
-        - Parquet: a combined table is written from its members'
-          parquet files (columnar decode instead of a second CSV
-          parse; measured -38% on the sf1 ingest spine).
+        Combined tables: every view takes its columns from its file's
+        header, checked equal across a group by ``read_csv_group``, so a
+        combined table is built from its members when every member was
+        written THIS run (``sink_written``; a stale or failed table must
+        not stand in for this run's rows) and no two share a stem:
+        inside Postgres by ``CREATE TABLE ... AS SELECT * FROM m1 UNION
+        ALL ...`` (the reference's own combine, main.py:215-248), or
+        from the members' parquet (-38% on the sf1 ingest spine). Else,
+        or if that fails, it is written from its CSV-backed view.
 
-        A group is written together when its combined view exists (so
-        every member header was checked), every member has a view and
-        no two members share a stem; its member futures all resolve to
-        the group write. If that write fails for any reason, each
-        member is written on its own, so one bad file fails only its
-        own table. Every other view (combine off, a failed or skipped
-        combine, a same-stem group, the parquet sink) is written from
-        its own per-file scan (the reference ran one pgfutter process
-        per file). Writes run concurrently from driver threads. Group
-        and per-file writes are submitted first and wait only on a
-        failed group's fallback writes, which run on a pool of their
-        own and wait on nothing, so the pools cannot deadlock. Each
-        combined view waits only for its own members' futures, so one
-        slow file never stalls an unrelated group.
-
-        Every view takes its columns from its file's header
-        (``read_csv_all_text``), and ``read_csv_group`` has verified
-        every member header equal to the first before the combined view
-        exists, at any group size. Member tables therefore hold the
-        combined view's columns by construction, and a combined table
-        is built from its members whenever every member was written
-        THIS run (``sink_written``: a table or directory left by a
-        previous run, or one whose write failed, must not stand in for
-        this run's rows) and no two members share a stem.
-        Every other case, and any failure of the member path, writes
-        the combined table from its CSV-backed view, so output content
-        never depends on which path ran. Per-table failures are logged
-        and the other tables continue (reference main.py:376-404 never
-        aborts the whole run on one table)."""
+        Writes run on driver threads; each combined table waits only
+        for its own members. Per-table failures are logged and the
+        other tables continue (reference main.py:376-404)."""
         cfg = self.config
         if cfg.db is not None:
-            write_view, combine, write_group = self._postgres_steps()
+            write_view, combine = self._postgres_steps()
         elif cfg.sink_dir is not None:
-            write_view, combine, write_group = self._parquet_steps()
+            write_view, combine = self._parquet_steps()
         else:
             return
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        members = {
-            view: {
-                str(f): import_view_name(file_table_name(f))
-                for f in result.table_csv_files.get(
-                    view.removeprefix("import_"), []
-                )
-            }
-            for view in result.combined_views
-        }
-        # two files with one stem (in different directories) share one
-        # member table, which holds only one of them
-        distinct = {
-            view: len(set(ms.values())) == len(ms)
-            for view, ms in members.items()
-        }
-        groups = {
-            view: ms
-            for view, ms in members.items()
-            if write_group is not None
-            and ms
-            and distinct[view]
-            and all(m in result.file_views for m in ms.values())
-        }
 
         def _write_one(view: str, df: DataFrame) -> None:
             try:
@@ -409,33 +398,19 @@ class Loader:
                 return
             result.sink_written.add(view)
 
-        def _write_group(view: str, routes: dict[str, str]) -> None:
-            try:
-                write_group(result.combined_views[view], routes)
-            except Exception:  # noqa: BLE001 - each member on its own
-                log.exception(
-                    "group write failed for %s; writing each member on "
-                    "its own",
-                    view,
-                )
-                list(
-                    fallback.map(
-                        lambda m: _write_one(m, result.file_views[m]),
-                        routes.values(),
-                    )
-                )
-                return
-            result.sink_written.update(routes.values())
-
         def _write_combined(view: str, csv_df: DataFrame) -> None:
-            ms = list(members[view].values())
+            table = view.removeprefix("import_")
+            files = result.table_csv_files.get(table, [])
+            ms = [import_view_name(file_table_name(f)) for f in files]
             for m in ms:
                 fut = file_futures.get(m)
                 if fut is not None:
                     fut.result()
+            # two files with one stem (in different directories) share
+            # one member table, which holds only one of them
             if (
                 ms
-                and distinct[view]
+                and len(set(ms)) == len(ms)
                 and all(m in result.sink_written for m in ms)
             ):
                 try:
@@ -450,17 +425,13 @@ class Loader:
                     )
             _write_one(view, csv_df)
 
-        with (
-            ThreadPoolExecutor(max_workers=16) as pool,
-            ThreadPoolExecutor(max_workers=16) as fallback,
-        ):
-            file_futures = {}
-            for view, routes in groups.items():
-                fut = pool.submit(_write_group, view, routes)
-                file_futures.update(dict.fromkeys(routes.values(), fut))
-            for view, df in result.file_views.items():
-                if view not in file_futures:
-                    file_futures[view] = pool.submit(_write_one, view, df)
+        result.sink_written.update(written)
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            file_futures = {
+                view: pool.submit(_write_one, view, df)
+                for view, df in result.file_views.items()
+                if view not in written
+            }
             combined_futures = [
                 pool.submit(_write_combined, view, df)
                 for view, df in result.combined_views.items()
@@ -468,21 +439,22 @@ class Loader:
             for fut in [*file_futures.values(), *combined_futures]:
                 fut.result()
 
+    def _write_files(self, routes: dict, heads: dict) -> set[str]:
+        """ONE routed ``copy_write`` (one Spark job) of every ``{file
+        path: (table, columns)}`` into Postgres over ``read_csv_routed``.
+        Returns the views written; raises, leaving no table, on failure."""
+        from .sources import copy_sink
+
+        multiline = self.config.csv_multiline
+        df = read_csv_routed(self.spark, routes, multiline, heads)
+        copy_sink.copy_write(df, self.config.db, routes)
+        return {import_view_name(t) for t, _ in routes.values()}
+
     def _postgres_steps(self):
-        """(write one view, combine from members, write a group's
-        member tables from one scan) for the Postgres sink."""
+        """(write one view, combine from members) for the Postgres
+        sink."""
         db = self.config.db
         from .sources import copy_sink
-        from .sources.pgwire import connect
-
-        # Once, before the fan-out: concurrent CREATE SCHEMA IF NOT
-        # EXISTS on a fresh database can fail on pg_namespace's unique
-        # index, and every copy_write would otherwise race to create it.
-        try:
-            with connect(db) as conn:
-                copy_sink.ensure_schema(conn)
-        except Exception:  # noqa: BLE001 - each write then logs its own
-            log.exception("sink schema creation failed")
 
         def write_copy(view: str, df: DataFrame) -> None:
             copy_sink.copy_write(df, db, view.removeprefix("import_"))
@@ -490,30 +462,19 @@ class Loader:
         def combine_in_db(
             view: str, members: list[str], csv_df: DataFrame
         ) -> None:
-            """Build the combined table as the positional UNION ALL of
-            its member tables. Each member table was created from its
-            view's columns, and every view takes its columns from its
-            file's header, which ``read_csv_group`` checked equal to
-            the first member's: the union lines up with the combined
-            view's columns by construction."""
+            """The positional UNION ALL of the member tables, whose
+            columns are their checked-equal headers (``write_sink``)."""
             copy_sink.combine_tables(
                 db,
                 view.removeprefix("import_"),
                 [m.removeprefix("import_") for m in members],
             )
 
-        def write_members(csv_df: DataFrame, routes: dict[str, str]) -> None:
-            copy_sink.copy_write(
-                csv_df,
-                db,
-                {f: m.removeprefix("import_") for f, m in routes.items()},
-            )
-
-        return write_copy, combine_in_db, write_members
+        return write_copy, combine_in_db
 
     def _parquet_steps(self):
-        """(write one view, combine from members, no group write) for
-        the parquet sink."""
+        """(write one view, combine from members) for the parquet
+        sink."""
         cfg = self.config
 
         def write_parquet(view: str, df: DataFrame) -> None:
@@ -547,7 +508,7 @@ class Loader:
                 view, self.spark.read.parquet(*paths).select(*csv_df.columns)
             )
 
-        return write_parquet, combine_from_parquet, None
+        return write_parquet, combine_from_parquet
 
 
 def run_pipeline(

@@ -9,35 +9,27 @@ opens one wire-protocol connection (``sources/pgwire.py``) and streams
 its rows through ``COPY ... FROM STDIN (FORMAT csv)``.
 
 Scale posture: the write is embarrassingly parallel and introduces no
-shuffle; each non-empty partition opens one backend connection, so a
-very wide frame should be coalesced by its caller to bound connection
-fan-in. Each task writes in ONE transaction (``BEGIN``, one ``COPY``
-per contiguous run of rows from one input file, ``COMMIT``), which may
-cover several files when a routed write packs them into one task: a
-failed task commits nothing, so Spark's task retry is safe; with
+shuffle; each non-empty partition opens one backend connection. Each
+task writes in ONE transaction (``BEGIN``, one ``COPY`` per contiguous
+run of rows from one input file, ``COMMIT``), so a failed task commits
+nothing and Spark's task retry is safe; a failed overwrite job drops
+its tables, so the tasks that did commit leave no partial table. With
 speculative execution enabled, use ``mode="append"`` into a staging
 table instead.
 
-The pipeline (``Loader.write_sink``) writes its tables concurrently
-from a driver thread pool. Every member table of a checked prefix
-group is written by ONE ``copy_write`` over the group's combined view
-(one scan, one Spark job), with a ``{file path: table}`` mapping that
-routes each row to its file's table; a failed group write falls back
-to one ``copy_write`` per member view, so one bad file fails only its
-own table. The pipeline creates the target schema once with
-``ensure_schema`` before that fan-out; ``ensure_schema`` also tolerates
-concurrent callers, so standalone concurrent ``copy_write`` calls into
-a fresh database work too. A prefix-combined table whose members all
-landed in the same run is built inside Postgres by ``combine_tables``
-(``CREATE TABLE ... AS SELECT * FROM m1 UNION ALL ...``, the
-reference's own combine, main.py:215-248) instead of COPYing the same
-rows a second time. Every view takes its columns from its file's
-header, and every member header was checked equal to the first before
-the combined view existed, at any group size, so the positional union
-lines up by construction. The pipeline falls back to ``copy_write``
-from the CSV-backed combined view when a member is missing, stale or
-failed, when two member files share one stem, or when the server-side
-combine fails.
+The pipeline (``Loader.write_sink``) writes every per-file table of an
+import with ONE ``copy_write`` over one scan of all its files (one
+Spark job), with a ``{file path: (table, columns)}`` mapping that
+routes each row to its file's table; that write starts right after
+discovery and the driver-side header checks, while the views are
+built. If it fails, each file is
+written on its own, so one bad file fails only its own table. A
+prefix-combined table whose members all landed in the same run is built
+inside Postgres by ``combine_tables`` (``CREATE TABLE ... AS SELECT *
+FROM m1 UNION ALL ...``, the reference's own combine, main.py:215-248)
+instead of COPYing the same rows a second time; otherwise it is COPYed
+from its CSV-backed view. ``ensure_schema`` tolerates concurrent
+callers, so concurrent ``copy_write`` calls into a fresh database work.
 
 Reference semantics parity: pgfutter creates all-text columns in the
 ``import`` schema from the CSV header (reference README.md:51-53);
@@ -101,11 +93,17 @@ def qualified(table: str, schema: str = "import") -> str:
 
 
 def create_table_ddl(
-    df: DataFrame, table: str, schema: str = "import"
+    df: DataFrame,
+    table: str,
+    schema: str = "import",
+    columns: list[str] | None = None,
 ) -> str:
+    """``CREATE TABLE`` from the frame's fields, or from its first
+    ``len(columns)`` fields named ``columns``."""
+    names = df.columns if columns is None else columns
     cols = ", ".join(
-        f"{quote_ident(f.name)} {pg_type_for(f.dataType)}"
-        for f in df.schema.fields
+        f"{quote_ident(n)} {pg_type_for(f.dataType)}"
+        for n, f in zip(names, df.schema.fields)
     )
     return f"CREATE TABLE {qualified(table, schema)} ({cols})"
 
@@ -179,51 +177,54 @@ def combine_tables(
 def copy_write(
     df: DataFrame,
     db: DbOptions,
-    table: str | Mapping[str, str],
+    table: str | Mapping[str, tuple[str, list[str]]],
     mode: str = "overwrite",
     schema: str = "import",
 ) -> None:
     """Stream a DataFrame into Postgres via COPY, one connection and one
     transaction per partition.
 
-    ``table`` is one table name, or a ``{file path: table}`` mapping:
-    each row then goes to the table of the CSV file it was read from
-    (``F.input_file_name()``, matched to the mapping's paths through
-    :func:`naming.uri_path_keys`), so one scan writes every member table
-    of a prefix group. A row whose file is not in the mapping fails its
-    task; it is never dropped. One name is the case where every row
-    goes to one table.
+    ``table`` is one table name (every row, every field), or a
+    ``{file path: (table, columns)}`` mapping: each row then goes to
+    the table of the CSV file it was read from (``F.input_file_name()``
+    matched through :func:`naming.uri_path_keys`), which takes the
+    row's first ``len(columns)`` fields under those names, so one scan
+    of files whose headers differ writes every file's table. A row
+    whose file is not in the mapping fails its task, never dropped.
 
-    ``mode``: ``overwrite`` drops + recreates every target table from
-    the DataFrame schema, in one Query on the driver before the job;
-    ``append`` requires them to exist. Each task opens one connection
-    and runs one ``COPY`` per contiguous run of rows from one file
-    inside ``BEGIN … COMMIT``, so a failed task commits nothing and a
-    Spark retry is safe.
-    """
+    ``mode``: ``overwrite`` drops + recreates every target table, in
+    one Query on the driver before the job, and drops them again if the
+    job fails, so committed tasks leave no partial table; ``append``
+    requires them to exist. Each task runs one ``COPY`` per contiguous
+    run of rows from one file inside ``BEGIN … COMMIT``, so a failed
+    task commits nothing and a Spark retry is safe."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append: {mode}")
     n_cols = len(df.columns)
     if isinstance(table, str):
-        tables, routes = [table], {}
+        targets: dict[str, list[str] | None] = {table: None}
+        routes: dict[str, tuple[str, int]] = {}
         rows_df, file_of = df, (lambda row: None)
     else:
-        tables = sorted(set(table.values()))
-        routes = {os.path.abspath(p): t for p, t in table.items()}
-        for p, t in table.items():
-            routes.setdefault(os.path.realpath(p), t)
+        targets = dict(table.values())
+        # lexical paths go in last, so they win a clash with a real one
+        routes = {
+            key(p): (t, len(cols))
+            for key in (os.path.realpath, os.path.abspath)
+            for p, (t, cols) in table.items()
+        }
         # the file URI rides after the data columns; the encoder reads
-        # the first n_cols fields by position, so it never writes it
+        # each table's first fields by position, so it never writes it
         rows_df = df.select("*", F.input_file_name())
         file_of = itemgetter(n_cols)
+    drop = {t: f"DROP TABLE IF EXISTS {qualified(t, schema)}" for t in targets}
     with connect(db) as conn:
         ensure_schema(conn, schema)
         if mode == "overwrite":
             conn.query(
                 "; ".join(
-                    f"DROP TABLE IF EXISTS {qualified(t, schema)}; "
-                    + create_table_ddl(df, t, schema)
-                    for t in tables
+                    f"{drop[t]}; {create_table_ddl(df, t, schema, cols)}"
+                    for t, cols in sorted(targets.items())
                 )
             )
 
@@ -233,14 +234,14 @@ def copy_write(
     user = db.user or "postgres"
     password = db.password
 
-    def _target(uri: str | None) -> str:
+    def _target(uri: str | None) -> tuple[str, int]:
         if uri is None:
-            return qualified(table, schema)
+            return qualified(table, schema), n_cols
         lexical, real = uri_path_keys(uri)
         t = routes.get(lexical) or routes.get(real)
         if t is None:
             raise KeyError(f"no target table for input file {uri!r}")
-        return qualified(t, schema)
+        return qualified(t[0], schema), t[1]
 
     def _write_partition(rows):
         runs = groupby(rows, file_of)
@@ -253,13 +254,20 @@ def copy_write(
         ) as pc:
             pc.query("BEGIN")
             for uri, run in chain([first], runs):
+                target, width = _target(uri)
                 pc.copy_in(
-                    f"COPY {_target(uri)} FROM STDIN (FORMAT csv, NULL '')",
-                    rows_to_copy_csv(run, n_cols),
+                    f"COPY {target} FROM STDIN (FORMAT csv, NULL '')",
+                    rows_to_copy_csv(run, width),
                 )
             pc.query("COMMIT")
 
-    rows_df.foreachPartition(_write_partition)
+    try:
+        rows_df.foreachPartition(_write_partition)
+    except Exception:
+        if mode == "overwrite":
+            with connect(db) as conn:
+                conn.query("; ".join(drop.values()))
+        raise
 
 
 def table_counts(

@@ -199,61 +199,99 @@ def read_csv_all_text(
     paths: list[str | Path] | str | Path,
     multiline: bool = True,
     _heads: dict[str, bytes | None] | None = None,
+    _schema: StructType | None = None,
 ) -> DataFrame:
     """Read CSV file(s) with the header as column names, all columns
     StringType (the reference's untyped ingest).
 
     The columns come from the driver's parse of the first path's
-    header (:func:`_header`, from the cached head sample), named by
-    Spark's own rule for CSV headers (:func:`_view_schema`). Spark then
-    reads with that explicit schema and ``header=true``, so it only
-    skips each file's header record: building a view runs no Spark
-    job, and the view's columns are the ones the combine check
-    compared. A zero-byte file gives a view with no columns; a first
-    path whose header is unreadable every way raises a ``ValueError``
-    naming it.
-
-    The charset is sniffed per file from its head bytes (the reference
-    ran chardet per file before handing pgfutter the dump,
-    utils.py:12-17), and the files of each encoding are read in one
-    scan. A uniform group is therefore one multi-path scan; a group
-    that mixes encodings is the positional union of one scan per
-    encoding, in the order each encoding first appears.
-
-    ``multiline=False`` is the splittability lever for newline-clean
-    dumps: multiLine=True parses quoted embedded newlines correctly
-    but pins each file to ONE input split (a 10 GB dump file becomes
-    one task); with the caller asserting no quoted newlines, Hadoop
-    line splitting parallelizes within files (measured 3.7x on a
-    single 435 MB file). The assertion is the caller's, but it is
-    self-guarding (VERDICT r09 #5): each file's head is sample-probed
-    for quoted embedded newlines and a positive raises loudly —
-    a mis-asserted dump must fail, never silently shear rows."""
+    header (:func:`checked_schema`, unless the caller already made that
+    check and passes its ``_schema``), named by Spark's own rule for
+    CSV headers (:func:`_view_schema`). Spark then reads with that
+    explicit schema and ``header=true``, so it only skips each file's
+    header record: building a view runs no Spark job, and the view's
+    columns are the ones the combine check compared. A zero-byte file
+    gives a view with no columns. Each file is decoded with its own
+    sniffed charset (:func:`_scan`)."""
     if isinstance(paths, (str, Path)):
         paths = [paths]
+    heads = {} if _heads is None else _heads
+    if _schema is None:
+        _schema = checked_schema(spark, paths, multiline, heads)
+    return _scan(spark, paths, _schema, multiline, _head_cache(spark, heads))
+
+
+def read_csv_routed(
+    spark: SparkSession,
+    routes: dict[str, tuple[str, list[str]]],
+    multiline: bool = True,
+    _heads: dict[str, bytes | None] | None = None,
+) -> DataFrame:
+    """One all-text frame over the files of ``{file path: (table,
+    columns)}`` routes (``copy_sink.copy_write``'s mapping), whose
+    headers may differ: one scan per encoding under all-string columns
+    ``_c0, _c1, …`` as wide as the widest route. The writer takes a
+    file's first ``len(columns)`` fields, so extra fields drop and
+    missing ones are NULL, as in the file's own scan (at a parse cost,
+    ``SCALE.md``)."""
+    width = max(len(cols) for _, cols in routes.values())
+    wide = _view_schema(spark, [""] * width)  # _c0, _c1, …
+    return _scan(
+        spark, list(routes), wide, multiline, _head_cache(spark, _heads)
+    )
+
+
+def checked_schema(
+    spark: SparkSession,
+    paths: list[str | Path],
+    multiline: bool = True,
+    _heads: dict[str, bytes | None] | None = None,
+) -> StructType:
+    """The view schema of ``paths`` from the first one's header, read
+    from the cached head sample with no Spark job. Raises a
+    ``ValueError`` naming the path when that header is unreadable
+    every way.
+
+    ``multiline=False`` is the splittability lever for newline-clean
+    dumps: multiLine=True pins each file to ONE input split, while
+    Hadoop line splitting parallelizes within files (measured 3.7x on
+    a single 435 MB file). It is self-guarding: a quoted embedded
+    newline in any path's head sample raises a ``ValueError``, so a
+    mis-asserted dump fails instead of silently shearing rows (an
+    unreadable head only warns)."""
     head_of = _head_cache(spark, _heads)
-    if not multiline:
-        quoted = _probe_heads(spark, paths, _quoted_newline_in_head, head_of)
-        for p, q in quoted.items():
-            if q is None:
-                log.warning(
-                    "quoted-newline probe skipped for %s: head unreadable; "
-                    "multiline=False row shearing cannot be ruled out for "
-                    "this file",
-                    p,
-                )
-            elif q:
-                raise ValueError(
-                    f"multiline=False asserted but {p} contains a "
-                    "quoted embedded newline in its sample window; "
-                    "line splitting would shear rows — drop "
-                    "csv_multiline=False (--csv-no-multiline) for "
-                    "this corpus"
-                )
     header = _header(paths[0], spark, head_of(paths[0]), multiline)
     if header is None:
         raise ValueError(f"header of {paths[0]} unreadable")
-    schema = _view_schema(spark, header)
+    quoted = {} if multiline else _probe_heads(
+        spark, paths, _quoted_newline_in_head, head_of
+    )
+    for p, q in quoted.items():
+        if q is None:
+            log.warning(
+                "quoted-newline probe skipped for %s: head unreadable; "
+                "multiline=False row shearing cannot be ruled out for "
+                "this file",
+                p,
+            )
+        elif q:
+            raise ValueError(
+                f"multiline=False asserted but {p} contains a "
+                "quoted embedded newline in its sample window; "
+                "line splitting would shear rows — drop "
+                "csv_multiline=False (--csv-no-multiline) for "
+                "this corpus"
+            )
+    return _view_schema(spark, header)
+
+
+def _scan(
+    spark: SparkSession, paths, schema: StructType, multiline: bool, head_of
+) -> DataFrame:
+    """``paths`` read under ``schema`` with ``header=true``. The charset
+    is sniffed per file from its head (the reference ran chardet per
+    file, utils.py:12-17): one scan per encoding, unioned positionally
+    in the order each encoding first appears."""
     by_enc: dict[str, list[str]] = {}
     for p in paths:
         by_enc.setdefault(_encoding_of(head_of(p)), []).append(str(p))
@@ -291,40 +329,28 @@ def read_csv_group(
     spark: SparkSession,
     files: list[Path],
     multiline: bool = True,
+    _heads: dict[str, bytes | None] | None = None,
 ) -> DataFrame:
     """Read a prefix group of CSVs as ONE scan (the combine operator O1;
     one scan per encoding when the group mixes encodings).
 
-    The reference combines per-file Postgres tables with
-    ``CREATE TABLE ... (LIKE first) INCLUDING ALL`` + ``UNION ALL``
-    (main.py:215-248); schema mismatches fail ("column does not exist",
-    main.py:247). Planning the union as a single multi-path scan instead
-    of N union nodes is our SURVEY §4.2 rewrite: one scan, no union
-    operators in the plan, file-level parallelism for free.
+    The reference combines per-file Postgres tables with ``CREATE
+    TABLE ... (LIKE first)`` + ``UNION ALL`` (main.py:215-248); one
+    multi-path scan replaces the N union nodes (SURVEY §4.2).
 
-    Every file's header must equal the first file's header (the
-    reference's LIKE-first-file check). The check
-    is deliberately STRICTER than the reference's actual failure mode:
-    Postgres UNION ALL is positional, so the reference silently
-    combines PERMUTED same-count all-text headers misassigned and only
-    errors on a column-count mismatch (main.py:247's "column does not
-    exist" is the commented-out WHERE, not the union). Spark's
-    multi-path scan is positional too — and in PERMISSIVE mode a
-    count drift doesn't even error: measured, a dropped column
-    null-pads and a gained column truncates, both silently. Exact
-    header equality is therefore the only drift guard in the plan, so
-    it must actually run, before the scan and for every member at any
-    group size. Headers unreadable by local IO (s3://, hdfs://) fall
-    back to a driver-side read through the JVM's Hadoop FileSystem
-    (one bounded head read per file, shared with the encoding sniff
-    and the quoted-newline probe; no Spark jobs). A member whose
-    header cannot be read either way fails the group with a
-    ``ValueError`` naming it: unverified, it would combine
-    positionally without error. The headers compared are the ones
-    every per-file and combined view takes its columns from, so equal
-    headers mean equal view columns.
+    Every file's header must equal the first file's, before the scan
+    and at any group size. This is STRICTER than the reference, whose
+    positional UNION ALL combines permuted same-count headers
+    misassigned, and Spark's positional scan null-pads or truncates a
+    count drift silently (measured), so exact header equality is the
+    only drift guard. Heads come from one bounded driver-side read per
+    file (the JVM's Hadoop FileSystem for s3://, hdfs://), shared with
+    the encoding sniff and the quoted-newline probe; no Spark jobs. A
+    member whose header cannot be read fails the group with a
+    ``ValueError`` naming it. The headers compared are the ones every
+    view takes its columns from, so equal headers mean equal columns.
     """
-    heads: dict[str, bytes | None] = {}
+    heads = {} if _heads is None else _heads
     head_of = _head_cache(spark, heads)
     if len(files) > 1:
         first: list[str] | None = None

@@ -292,8 +292,9 @@ def _write_csvs(d: Path, files: dict[str, str]) -> Path:
 
 def _spy(monkeypatch, fail: dict | None = None) -> dict[str, list]:
     """Record the tables the pipeline COPYs and combines in Postgres.
-    A routed ``copy_write`` (a ``{file: table}`` mapping) records each
-    of its tables under ``copy`` and their list under ``routed``.
+    A routed ``copy_write`` (a ``{file: (table, columns)}`` mapping)
+    records each of its tables under ``copy`` and their sorted list
+    under ``routed``.
     ``fail`` maps a table name to a function that replaces the
     ``copy_write`` call writing it (to inject a failure): a routed call
     that writes any such table fails the same way, so the per-member
@@ -302,7 +303,11 @@ def _spy(monkeypatch, fail: dict | None = None) -> dict[str, list]:
     real_copy, real_combine = copy_sink.copy_write, copy_sink.combine_tables
 
     def copy_spy(df, db, table, *a, **k):
-        tables = [table] if isinstance(table, str) else sorted(table.values())
+        tables = (
+            [table]
+            if isinstance(table, str)
+            else sorted(t for t, _ in table.values())
+        )
         calls["copy"].extend(tables)
         if not isinstance(table, str):
             calls["routed"].append(tables)
@@ -325,6 +330,16 @@ def _rows(db: DbOptions, table: str) -> list[tuple]:
         return sorted(
             c.query(f'SELECT * FROM import."{table}"'),
             key=repr,
+        )
+
+
+def _exists(db: DbOptions, table: str) -> bool:
+    with _conn(db) as c:
+        return bool(
+            c.query(
+                "SELECT 1 FROM information_schema.tables WHERE "
+                f"table_schema='import' AND table_name='{table}'"
+            )
         )
 
 
@@ -535,7 +550,8 @@ def test_pipeline_failed_member_write_falls_back_to_copy(
     result = run_pipeline(
         spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
     )
-    # once in the failed group write, once on its own in the fallback
+    # once in the failed routed write of the import, once on its own in the
+    # fallback
     assert calls["routed"] == [["crabs_1", "crabs_2"]]
     assert calls["copy"].count("crabs_1") == 2
     assert "import_crabs_1" not in result.sink_written
@@ -552,9 +568,9 @@ def test_pipeline_same_stem_members_combine_through_copy(
     spark, pg, tmp_path, monkeypatch
 ):
     """Two files with one stem in different directories share a member
-    table name, so that table holds only one of them. Their group is
-    combined by COPY from the CSV-backed view, never from the member
-    table twice."""
+    table name, so that table holds only one of them: the file whose
+    view the load keeps. Their group is combined by COPY from the
+    CSV-backed view, never from the member table twice."""
     data = tmp_path / "data"
     _write_csvs(data / "x", {"eels_1.csv": "name\nConger\nMoray\n"})
     _write_csvs(data / "y", {"eels_1.csv": "name\nGlass\nElectric\n"})
@@ -563,11 +579,17 @@ def test_pipeline_same_stem_members_combine_through_copy(
         spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
     )
     assert calls["combine"] == []
-    # no routed group write: the shared member view is written from its
-    # own scan, then the combined table from the CSV-backed view
-    assert calls["routed"] == []
+    # the routed write of the import writes the shared member table
+    # once, then the combined table is written from the CSV-backed view
+    assert calls["routed"] == [["eels_1"]]
     assert calls["copy"] == ["eels_1", "eels"]
     assert "import_eels" in result.sink_written
+    assert _rows(pg, "eels_1") == sorted(
+        (tuple(r) for r in result.file_views["import_eels_1"].collect()),
+        key=repr,
+    )
+    # the later file in discovery order (y/) is the one kept
+    assert _rows(pg, "eels_1") == [("Electric",), ("Glass",)]
     assert _rows(pg, "eels") == [
         ("Conger",), ("Electric",), ("Glass",), ("Moray",),
     ]
@@ -598,13 +620,16 @@ def _csv_rows(text: str) -> list[tuple]:
 def test_routed_task_commits_nothing_when_a_later_copy_fails(
     spark, pg, tmp_path, monkeypatch
 ):
-    """A task that writes several files of a group runs their COPYs in
-    one transaction: when the second file's COPY fails (a NUL byte,
-    which Postgres text rejects), none of the first file's rows are
-    committed. In the pipeline the failed group write then falls back to
-    one write per member: the bad member fails alone, and every healthy
-    member holds exactly its CSV rows, with none left twice by the
-    failed group write."""
+    """A task that writes several files runs their COPYs in one
+    transaction: when the second file's COPY fails (a NUL byte, which
+    Postgres text rejects), none of the first file's rows are committed
+    (checked in append mode, where the tables outlive the failed job; a
+    failed overwrite drops them). In the pipeline the failed routed write of the import then falls
+    back to one write per file: the bad file fails alone, and every
+    healthy file's table holds exactly its CSV rows, with none left
+    twice by the failed routed write. The combined table's CSV-backed
+    write fails on the same row, and its failed overwrite leaves no
+    table: the report shows every CSV row of the group missing."""
     gulls = {
         "gulls_1.csv": "name,n\n" + "".join(f"gull{i},{i}\n" for i in range(40)),
         "gulls_2.csv": "name,n\nbad\x00,1\n",
@@ -613,25 +638,40 @@ def test_routed_task_commits_nothing_when_a_later_copy_fails(
     terns = {"terns_1.csv": "name\nArctic\n", "terns_2.csv": "name\nSooty\n"}
     data = _write_csvs(tmp_path / "data", {**gulls, **terns})
     first, second = data / "gulls_1.csv", data / "gulls_2.csv"
+    with _conn(pg) as c:
+        ensure_schema(c)
+        c.query(
+            "DROP TABLE IF EXISTS import.gulls_1, import.gulls_2; "
+            "CREATE TABLE import.gulls_1 (name text, n text); "
+            "CREATE TABLE import.gulls_2 (name text, n text)"
+        )
     # one task for the scan: small files are packed largest first
     with _spark_conf(spark, {"spark.sql.files.minPartitionNum": "1"}):
         view = read_csv_group(spark, [first, second])
         assert view.rdd.getNumPartitions() == 1
+        routes = {
+            str(first): ("gulls_1", view.columns),
+            str(second): ("gulls_2", view.columns),
+        }
+        # append keeps the tables, so only the task's transaction can
+        # keep the first file's 40 rows out of gulls_1
         with pytest.raises(Exception, match="0x00"):
-            copy_write(
-                view, pg, {str(first): "gulls_1", str(second): "gulls_2"}
-            )
-    # the driver created both tables; the task committed no row
-    assert table_counts(pg, ["gulls_1", "gulls_2"]) == {
-        "gulls_1": 0, "gulls_2": 0,
-    }
+            copy_write(view, pg, routes, mode="append")
+        assert _exists(pg, "gulls_1") and _exists(pg, "gulls_2")
+        assert table_counts(pg, ["gulls_1", "gulls_2"]) == {
+            "gulls_1": 0, "gulls_2": 0,
+        }
+        # a failed overwrite drops the tables its driver created
+        with pytest.raises(Exception, match="0x00"):
+            copy_write(view, pg, routes)
+    assert not _exists(pg, "gulls_1") and not _exists(pg, "gulls_2")
 
     calls = _spy(monkeypatch)
     result = run_pipeline(
         spark, PipelineConfig(sources=[data], combine_tables=True, db=pg)
     )
-    assert sorted(calls["routed"]) == [
-        ["gulls_1", "gulls_2", "gulls_3"], ["terns_1", "terns_2"],
+    assert calls["routed"] == [
+        ["gulls_1", "gulls_2", "gulls_3", "terns_1", "terns_2"],
     ]
     assert "import_gulls_2" not in result.sink_written
     assert {"import_gulls_1", "import_gulls_3"} <= result.sink_written
@@ -643,6 +683,10 @@ def test_routed_task_commits_nothing_when_a_later_copy_fails(
     report = {r.table: r for r in result.report.collect()}
     assert report["terns"].difference == 0
     assert _rows(pg, "terns") == [("Arctic",), ("Sooty",)]
+    assert "import_gulls" not in result.sink_written
+    assert not _exists(pg, "gulls")
+    assert report["gulls"].csv_rows == 43
+    assert report["gulls"].difference == report["gulls"].csv_rows
 
 
 def test_routed_write_matches_odd_file_names(
@@ -650,7 +694,8 @@ def test_routed_write_matches_odd_file_names(
 ):
     """``input_file_name`` gives a %-encoded URI. File names with a
     space, ``%``, ``+``, a literal ``%41`` and a non-ASCII character
-    still route each row to its own file's table, in one group write."""
+    still route each row to its own file's table, in one routed write
+    of the import."""
     names = {
         "odd_a b.csv": "odd_a_b",
         "odd_50%.csv": "odd_50",
@@ -720,6 +765,174 @@ def test_routed_write_split_member_lands_once(
         "ferns_1": n, "ferns_2": 1, "ferns": n + 1,
     }
     assert result.check_passed
+
+
+def test_failed_split_overwrite_leaves_no_table(spark, pg, tmp_path):
+    """One file split over several tasks, one of which fails (a NUL
+    byte late in the file): the tasks that committed leave no rows
+    behind, because the failed overwrite drops its table."""
+    from postgresimporter_spark.sources.csv import read_csv_all_text
+
+    n = 3000
+    rows = [f"{i},value{i}\n" for i in range(n)]
+    rows[n - 10] = "bad\x00,1\n"
+    path = tmp_path / "split.csv"
+    path.write_text("id,v\n" + "".join(rows))
+    with _conn(pg) as c:
+        ensure_schema(c)
+        c.query('DROP TABLE IF EXISTS import."split"')
+        c.query('CREATE TABLE import."split" (id text, v text)')
+        c.query("INSERT INTO import.\"split\" VALUES ('old', 'row')")
+    with _spark_conf(spark, {"spark.sql.files.maxPartitionBytes": "8192"}):
+        view = read_csv_all_text(spark, path, multiline=False)
+        assert view.rdd.getNumPartitions() > 3
+        with pytest.raises(Exception, match="0x00"):
+            copy_write(view, pg, "split")
+    assert not _exists(pg, "split")
+
+
+def _grouped_jobs(spark, monkeypatch, group: str) -> None:
+    """Run every routed ``copy_write`` under the Spark job group
+    ``group``, so a test can count the jobs it fired."""
+    sc, inner = spark.sparkContext, copy_sink.copy_write
+
+    def grouped(df, db, table, *a, **k):
+        if isinstance(table, str):
+            return inner(df, db, table, *a, **k)
+        sc.setJobGroup(group, "routed copy_write")
+        try:
+            return inner(df, db, table, *a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(copy_sink, "copy_write", grouped)
+
+
+@pytest.mark.parametrize("combine", [True, False])
+def test_import_wide_write_covers_every_file(
+    spark, pg, tmp_path, monkeypatch, combine
+):
+    """One routed ``copy_write`` and one Spark job write every per-file
+    table of the import: two prefix groups of different widths (16 and
+    9 columns), a UTF-16 singleton next to the UTF-8 files and a
+    zero-byte file. Every table's columns and rows equal its per-file
+    view's. In the narrower file a row with extra fields loses them and
+    a row with missing fields ends in NULLs, as its own scan reads
+    them."""
+    wide = ",".join(f"w{i}" for i in range(16))
+    narrow = ",".join(f"n{i}" for i in range(9))
+
+    def row(tag, n):
+        return ",".join(f"{tag}{i}" for i in range(n)) + "\n"
+
+    data = _write_csvs(
+        tmp_path / "data",
+        {
+            "wide_1.csv": wide + "\n" + row("a", 16) + row("b", 16),
+            "wide_2.csv": wide + "\n" + row("c", 16),
+            "narrow_1.csv": narrow + "\n" + row("d", 9) + row("e", 9),
+            "narrow_2.csv": narrow + "\n" + row("f", 9) + row("x", 11)
+            + row("m", 7),
+            "void.csv": "",
+        },
+    )
+    (data / "solo.csv").write_bytes(
+        'name,notes\nPolly,"talks\na lot"\nNemo,fish\n'.encode("utf-16")
+    )
+    db = _fresh_db(pg, f"import_wide_{str(combine).lower()}")
+    calls = _spy(monkeypatch)
+    group = f"import-wide-{combine}"
+    _grouped_jobs(spark, monkeypatch, group)
+    result = run_pipeline(
+        spark, PipelineConfig(sources=[data], combine_tables=combine, db=db)
+    )
+    tables = sorted(v.removeprefix("import_") for v in result.file_views)
+    assert tables == [
+        "narrow_1", "narrow_2", "solo", "void", "wide_1", "wide_2",
+    ]
+    assert calls["routed"] == [tables]
+    assert calls["copy"] == tables
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sorted(calls["combine"]) == (["narrow", "wide"] if combine else [])
+    assert set(result.file_views) <= result.sink_written
+    for view, df in result.file_views.items():
+        t = view.removeprefix("import_")
+        assert _column_types(db, t) == [(c, "text") for c in df.columns]
+        assert _rows(db, t) == sorted((tuple(r) for r in df.collect()), key=repr)
+    assert _rows(db, "narrow_2") == sorted(
+        [
+            tuple(f"f{i}" for i in range(9)),
+            tuple(f"x{i}" for i in range(9)),
+            tuple(f"m{i}" for i in range(7)) + (None, None),
+        ],
+        key=repr,
+    )
+    assert _rows(db, "solo") == [("Nemo", "fish"), ("Polly", "talks\na lot")]
+    assert _column_types(db, "void") == []
+    assert result.check_passed
+
+
+def test_import_wide_write_leaves_out_a_sheared_file(
+    spark, pg, tmp_path, monkeypatch, caplog
+):
+    """Under ``csv_multiline=False`` a file whose head holds a quoted
+    newline is left out of the routed write and fails alone with
+    ``import failed``; every other table lands."""
+    import logging
+
+    data = _write_csvs(
+        tmp_path / "data",
+        {
+            "voles_1.csv": "name,n\nBank,1\n",
+            "voles_2.csv": "name,n\nField,2\nWater,3\n",
+            "shrews.csv": 'name,notes\nPygmy,"very\nsmall"\n',
+            "mice.csv": "name\nHouse\n",
+        },
+    )
+    calls = _spy(monkeypatch)
+    with caplog.at_level(logging.ERROR, logger="postgresimporter_spark"):
+        result = run_pipeline(
+            spark,
+            PipelineConfig(
+                sources=[data], combine_tables=True, db=pg,
+                csv_multiline=False,
+            ),
+        )
+    assert calls["routed"] == [["mice", "voles_1", "voles_2"]]
+    assert any(
+        "import failed" in r.getMessage() and "shrews.csv" in r.getMessage()
+        for r in caplog.records
+    )
+    assert "import_shrews" not in result.file_views
+    assert {
+        "import_mice", "import_voles_1", "import_voles_2", "import_voles",
+    } <= result.sink_written
+    assert _rows(pg, "voles") == [("Bank", "1"), ("Field", "2"), ("Water", "3")]
+    assert _rows(pg, "mice") == [("House",)]
+
+
+def test_failed_load_waits_for_the_routed_write(
+    spark, pg, tmp_path, monkeypatch
+):
+    """A load that raises after the routed write has started (here in
+    the function library install) waits for that write before the error
+    propagates, so no write keeps running behind a failed load."""
+    from postgresimporter_spark import pipeline
+
+    def slow_copy(real_copy, df, db, table):
+        time.sleep(1)
+        return real_copy(df, db, table)
+
+    def broken_install(spark):
+        raise RuntimeError("install failed")
+
+    data = _write_csvs(tmp_path / "data", {"wrens_1.csv": "name\nCactus\n"})
+    calls = _spy(monkeypatch, fail={"wrens_1": slow_copy})
+    monkeypatch.setattr(pipeline, "register_all", broken_install)
+    with pytest.raises(RuntimeError, match="install failed"):
+        run_pipeline(spark, PipelineConfig(sources=[data], db=pg))
+    assert calls["routed"] == [["wrens_1"]]
+    assert _rows(pg, "wrens_1") == [("Cactus",)]
 
 
 def test_pipeline_failed_table_does_not_stop_others(
